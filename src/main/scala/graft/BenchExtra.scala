@@ -104,14 +104,15 @@ object BenchExtra {
       }
     }
     val mins = samples.map { case (k, v) => k -> v.min }
-    val json = new StringBuilder("{")
-    json.append("\"sf\":\"").append(sfDir).append("\",")
-    json.append(shared.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("", ",", ","))
-    json.append("\"total_min\":").append(fmt(mins.values.sum)).append(",")
-    json.append(mins.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("\"queries_min\":{", ",", "},"))
-    json.append(samples.map { case (k, v) =>
-      "\"" + k + "\":[" + v.map(fmt).mkString(",") + "]" }.mkString("\"queries_samples\":{", ",", "}}"))
-    Files.writeString(Paths.get(out), json.toString + "\n")
+    // one list of top-level members joined once: an empty section (e.g.
+    // BENCHX_SKIP_SHARED=1) leaves no stray comma
+    val json = Seq("\"sf\":\"" + sfDir + "\"") ++
+      shared.map { case (k, v) => "\"" + k + "\":" + fmt(v) } ++
+      Seq("\"total_min\":" + fmt(mins.values.sum),
+        mins.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("\"queries_min\":{", ",", "}"),
+        samples.map { case (k, v) =>
+          "\"" + k + "\":[" + v.map(fmt).mkString(",") + "]" }.mkString("\"queries_samples\":{", ",", "}"))
+    Files.writeString(Paths.get(out), json.mkString("{", ",", "}") + "\n")
     println(s"[benchx] total_min=${fmt(mins.values.sum)} written to $out")
     Queries.freeSharedCaches()
     spark.stop()

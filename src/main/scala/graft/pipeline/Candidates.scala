@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.core.{GraftConfig, SimHashCore}
 import graft.model.FingerprintRow
 
@@ -224,11 +225,7 @@ object Candidates {
                    onlyDiffGroup: Boolean = false, onlySameGroup: Boolean = false,
                    expandPairs: Boolean = false): DataFrame = {
     if (sigma < 0) { // sigma_normal = -1 matches nothing (dif_config.txt:3)
-      val spark = fps.sparkSession
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("a", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("b", org.apache.spark.sql.types.StringType))))
+      Materialize.empty(fps.sparkSession, "a" -> StringType, "b" -> StringType)
     } else {
       // collapse rows with identical (simhash, span, group) — d=0 and
       // span-compatible by construction — unless a group compare mode needs

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Iterative Dataset-based connected components (hash-partitioned min-label
   * propagation) — the scalable replacement for the reference's in-memory
@@ -31,46 +32,13 @@ object Clustering {
     * @param converged  false iff maxIter was hit with labels still changing —
     *                   the component partition may then be SPLIT (never
     *                   over-merged); callers must surface this.
-    */
-  final case class CCResult(labels: DataFrame, iterations: Int, converged: Boolean)
-
-  /** Eager materialization + lineage truncation. Prefers a RELIABLE
-    * checkpoint (HDFS/object-store) when `sparkContext.setCheckpointDir` is
-    * configured — on a real cluster localCheckpoint blocks live on executors
-    * and an executor loss kills the job mid-stage; local mode (no checkpoint
-    * dir) falls back to localCheckpoint.
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-
-  /** Materialize + report which persisted-RDD ids the call created, so the
-    * CC loop can free a batch's blocks once the next batch supersedes it.
-    * (Reliable `checkpoint` writes files instead of blocks — the looked-up
-    * id is then not in getPersistentRDDs and the unpersist is a no-op; file
-    * cleanup is the context cleaner's job.) Without this, every batch's
-    * blocks live until the session ends: repeated CC runs in one session
-    * accumulate them and GC-thrash the JVM (measured 5x wall blow-up on
-    * back-to-back runs).
     *
-    * Ids are read from the materialized frame's own `LogicalRDD` plan leaf
-    * (the exact RDD `Dataset.localCheckpoint` persisted) — not from a
-    * before/after snapshot of `getPersistentRDDs`, which attributes ANY
-    * concurrently-persisted RDD to this call and would free another
-    * thread's live (non-recomputable) checkpoint blocks; round 6 runs
-    * independent CC tiers concurrently (guide §2.6).
+    * `labels` is lazy and reads the id dictionary and the final batch;
+    * `release()` frees those blocks once `labels` has been materialized.
     */
-  private def materializeTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val out = materialize(df)
-    val ids = out.queryExecution.logical.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
-    (out, ids)
-  }
-
-  private def unpersistIds(df: DataFrame, ids: Set[Int]): Unit = {
-    val persisted = df.sparkSession.sparkContext.getPersistentRDDs
-    ids.foreach(id => persisted.get(id).foreach(_.unpersist(false)))
+  final case class CCResult(labels: DataFrame, iterations: Int, converged: Boolean)(
+      blocks: Seq[Materialized]) {
+    def release(): Unit = blocks.foreach(_.release())
   }
 
   /** @param edges  (a, b) string-id pairs, each pair once in either order
@@ -101,177 +69,172 @@ object Clustering {
     // re-inherits the plan's estimated sizeInBytes, whose ~200-leaf product
     // then COMPOUNDS per batch into million-bit BigInts that stall the
     // optimizer's stats visitor — driver-side, before any task runs.)
-    val sparkEdges = edges.sparkSession
+    val spark = edges.sparkSession
     val dict = {
-      import sparkEdges.implicits._
+      import spark.implicits._
       val sortedIds = edges.select(col("a").as("id"))
         .unionByName(edges.select(col("b").as("id")))
         .distinct()
         .orderBy("id")
         .as[String].rdd.zipWithIndex()
-      materializeTracked(sortedIds.toDF("id", "rid"))._1
+      Materialize(sortedIds.toDF("id", "rid"))
     }
+    // live batch handles, newest first: a batch's blocks are freed as soon
+    // as the next batch is materialized (the next batch's plan scans its OWN
+    // checkpoint; kept until session end, they GC-thrashed back-to-back runs
+    // to 5x wall). The FINAL batch backs the returned labels. On any failure
+    // every handle taken here is released before the error propagates.
+    var batches = List.empty[Materialized]
+    try {
+      // Lineage discipline (plan-explosion gotcha): the pointer-jump step
+      // SELF-JOINS each round's frame, so an un-truncated logical plan
+      // doubles per round (2^rounds); and `sym` is re-referenced every
+      // round. Both are therefore materialized eagerly — the plan each round
+      // is then two scans, constant-size, regardless of round count.
+      // (Data-wise these frames are edge-incident rows only — tiny next to
+      // the corpus.)
+      val longEdges = edges
+        .join(dict.df.select(col("id").as("a"), col("rid").as("ra")), Seq("a"))
+        .join(dict.df.select(col("id").as("b"), col("rid").as("rb")), Seq("b"))
+        .select(col("ra"), col("rb"))
+      val sym = Materialize(
+        longEdges.select(col("ra").as("src"), col("rb").as("dst"))
+          .unionByName(longEdges.select(col("rb").as("src"), col("ra").as("dst")))
+          .repartition(col("src")))
 
-    // Lineage discipline (plan-explosion gotcha): the pointer-jump step
-    // SELF-JOINS each round's frame, so an un-truncated logical plan doubles
-    // per round (2^rounds); and `sym` is re-referenced every round. Both are
-    // therefore materialized eagerly — the plan each round is then two scans,
-    // constant-size, regardless of round count. (Data-wise these frames are
-    // edge-incident rows only — tiny next to the corpus.)
-    val longEdges = edges
-      .join(dict.select(col("id").as("a"), col("rid").as("ra")), Seq("a"))
-      .join(dict.select(col("id").as("b"), col("rid").as("rb")), Seq("b"))
-      .select(col("ra"), col("rb"))
-    val (sym, symIds) = materializeTracked(
-      longEdges.select(col("ra").as("src"), col("rb").as("dst"))
-        .unionByName(longEdges.select(col("rb").as("src"), col("ra").as("dst")))
-        .repartition(col("src")))
+      // Round-6 floor cut: with AQE on, EVERY exchange in a batch is its own
+      // query-stage job with driver/replan turnaround — ~15 stage-jobs per
+      // batch of tiny checkpoint-backed CC frames, pure serial-floor latency
+      // that does not shrink with cores. The loop therefore runs in a CHILD
+      // session (same SparkContext, own SQLConf — no conf set/restore races
+      // with concurrently-running tier CCs) with AQE off, so one batch is ONE
+      // job with all its stages pipelined by the DAG scheduler. What AQE was
+      // providing the loop is replaced explicitly: (a) runtime partition
+      // coalescing → a static shuffle width derived from the materialized
+      // sym's OWN partition count (AQE already coalesced that exchange to a
+      // data-proportional width; floored for multi-core parallelism) —
+      // scale-adaptive, not a tuned constant; (b) dynamic broadcast — not
+      // applicable: the loop's joins are label-frame ⋈ label-frame/sym, both
+      // sides checkpoint-backed with only product-inflated inherited size
+      // estimates, so AQE never broadcast them here anyway (and at scale they
+      // are not broadcastable). The candidate generators and everything else
+      // keep AQE (fully off was measured 3x worse in round 5 — dynamic
+      // broadcasts there are load-bearing).
+      val loopSession = spark.newSession()
+      loopSession.conf.set("spark.sql.adaptive.enabled", "false")
+      loopSession.conf.set("spark.sql.shuffle.partitions", math.max(
+        sym.df.rdd.getNumPartitions,
+        math.min(16, spark.sparkContext.defaultParallelism)).toString)
+      // bridge sym into the loop session through a global temp view (public
+      // API; same plan + checkpoint blocks, no data conversion)
+      val symView = "graft_cc_sym_" + java.util.UUID.randomUUID.toString.replace("-", "_")
 
-    // Round-6 floor cut: with AQE on, EVERY exchange in a batch is its own
-    // query-stage job with driver/replan turnaround — ~15 stage-jobs per
-    // batch of tiny checkpoint-backed CC frames, pure serial-floor latency
-    // that does not shrink with cores. The loop therefore runs in a CHILD
-    // session (same SparkContext, own SQLConf — no conf set/restore races
-    // with concurrently-running tier CCs) with AQE off, so one batch is ONE
-    // job with all its stages pipelined by the DAG scheduler. What AQE was
-    // providing the loop is replaced explicitly: (a) runtime partition
-    // coalescing → a static shuffle width derived from the materialized
-    // sym's OWN partition count (AQE already coalesced that exchange to a
-    // data-proportional width; floored for multi-core parallelism) —
-    // scale-adaptive, not a tuned constant; (b) dynamic broadcast — not
-    // applicable: the loop's joins are label-frame ⋈ label-frame/sym, both
-    // sides checkpoint-backed with only product-inflated inherited size
-    // estimates, so AQE never broadcast them here anyway (and at scale they
-    // are not broadcastable). The candidate generators and everything else
-    // keep AQE (fully off was measured 3x worse in round 5 — dynamic
-    // broadcasts there are load-bearing). GRAFT_CC_LOOP_AQE=1 reverts to
-    // the in-session AQE loop.
-    val loopSession =
-      if (sys.env.contains("GRAFT_CC_LOOP_AQE")) None
-      else {
-        val s = edges.sparkSession.newSession()
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        s.conf.set("spark.sql.shuffle.partitions", math.max(
-          sym.rdd.getNumPartitions,
-          math.min(16, edges.sparkSession.sparkContext.defaultParallelism)).toString)
-        Some(s)
+      var iter = 0
+      var converged = false
+      var labels: DataFrame = null
+      try {
+        sym.df.createOrReplaceGlobalTempView(symView)
+        val symLoop = loopSession.table("global_temp." + symView)
+
+        // Only vertices incident to an edge participate in propagation; the
+        // (overwhelmingly more numerous, at production dup rates) singletons
+        // keep their own label and never enter the loop. Initial labels stay
+        // lazy — their plan is one scan of the checkpointed `sym` (constant
+        // size), and round 1 materializes them anyway; a separate init job
+        // would be a pure extra barrier.
+        labels = symLoop.select(col("src").as("vid")).distinct()
+          .withColumn("label", col("vid"))
+
+        // One BATCH = two full rounds of (propagate min over edges, then
+        // pointer jump x2) PLUS a final convergence-probe propagate, fused
+        // into a single materialization. Rationale: every driver barrier is
+        // fixed latency that does not shrink with cores (the
+        // scaling-efficiency killer); labels shrink ~16x in distance per
+        // batch (2 rounds x jump x2), so almost all corpora converge in one
+        // batch — and the in-batch probe PROVES it without a second full
+        // batch (previously a whole 2-round confirmation batch, ~14 extra
+        // shuffles, ran just to observe changed == 0).
+        //
+        // Probe soundness (why propagate-stability == full convergence):
+        // labels only ever decrease, stay within the vertex's own component,
+        // and label(v) <= v, so the component min m always keeps
+        // label(m) = m. If a propagate changes nothing, then
+        // nmin(v) >= label(v) for every v; walking any path
+        // m = x0 - x1 - ... - xk: nmin(x1) <= label(m) = m and
+        // label(x1) <= nmin(x1) give label(x1) = m, and inductively every
+        // label in the component equals m. Uniform root labels also make
+        // both jumps no-ops — nothing in a further batch could change any
+        // label.
+        // probe variant keeps the incoming label as `prev` so the converged
+        // test is a filter on the SAME materialized frame (no extra join),
+        // and its own min-fold is still applied — probe work is never thrown
+        // away
+        def propagateProbe(d: DataFrame): DataFrame = {
+          val neighborMin = symLoop
+            .join(d.select(col("vid").as("src"), col("label")), "src")
+            .groupBy(col("dst").as("vid"))
+            .agg(min("label").as("nmin"))
+          d.join(neighborMin, Seq("vid"), "left")
+            .select(col("vid"), col("label").as("prev"),
+              least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
+        }
+        def propagate(d: DataFrame): DataFrame =
+          propagateProbe(d).select("vid", "label")
+        def jump(d: DataFrame): DataFrame = d
+          .join(d.select(col("vid").as("label"), col("label").as("ll")),
+            Seq("label"), "left")
+          .select(col("vid"),
+            least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
+        def round(d: DataFrame): DataFrame = jump(jump(propagate(d)))
+
+        // Empty edge set → nothing propagates: skip the loop entirely
+        // instead of paying one full batch to observe it. Not just a test
+        // nicety — the tiered surface runs one CC per tier and the reference
+        // ships sigma_normal = -1 (an ALWAYS-empty normal tier), so this one
+        // limit-1 job on the materialized `sym` saves ~15 shuffles per
+        // tiered query. `labels` must then stop referencing `sym` (whose
+        // blocks are freed below, and the lazy init plan scans them).
+        converged = sym.df.isEmpty
+        if (converged)
+          labels = Materialize.empty(spark, "vid" -> LongType, "label" -> LongType)
+        while (!converged && iter < maxIter) {
+          batches = Materialize(propagateProbe(round(round(labels)))) :: batches
+          val next = batches.head.df
+          val probeChanged = next.filter(col("label") =!= col("prev")).count()
+          batches.tail.foreach(_.release())
+          batches = batches.take(1)
+          labels = next.select("vid", "label")
+          converged = probeChanged == 0
+          iter += 3 // two full rounds + the probe propagate per batch
+        }
+      } finally {
+        // sym is only referenced inside the loop rounds; the returned plan
+        // bottoms out at the final batch's checkpoint + the caller's vertices
+        sym.release()
+        spark.catalog.dropGlobalTempView(symView)
       }
-    // bridge sym into the loop session through a global temp view (public
-    // API; same plan + checkpoint blocks, no data conversion)
-    val symView = "graft_cc_sym_" + java.util.UUID.randomUUID.toString.replace("-", "_")
-    val symLoop = loopSession.map { s =>
-      sym.createOrReplaceGlobalTempView(symView)
-      s.table("global_temp." + symView)
-    }.getOrElse(sym)
-
-    // Only vertices incident to an edge participate in propagation; the
-    // (overwhelmingly more numerous, at production dup rates) singletons
-    // keep their own label and never enter the loop. Initial labels stay
-    // lazy — their plan is one scan of the checkpointed `sym` (constant
-    // size), and round 1 materializes them anyway; a separate init job
-    // would be a pure extra barrier.
-    var labels = symLoop.select(col("src").as("vid")).distinct()
-      .withColumn("label", col("vid"))
-
-    // One BATCH = two full rounds of (propagate min over edges, then pointer
-    // jump x2) PLUS a final convergence-probe propagate, fused into a single
-    // materialization. Rationale: every driver barrier is fixed latency that
-    // does not shrink with cores (the scaling-efficiency killer); labels
-    // shrink ~16x in distance per batch (2 rounds x jump x2), so almost all
-    // corpora converge in one batch — and the in-batch probe PROVES it
-    // without a second full batch (previously a whole 2-round confirmation
-    // batch, ~14 extra shuffles, ran just to observe changed == 0).
-    //
-    // Probe soundness (why propagate-stability == full convergence): labels
-    // only ever decrease, stay within the vertex's own component, and
-    // label(v) <= v, so the component min m always keeps label(m) = m. If a
-    // propagate changes nothing, then nmin(v) >= label(v) for every v;
-    // walking any path m = x0 - x1 - ... - xk: nmin(x1) <= label(m) = m and
-    // label(x1) <= nmin(x1) give label(x1) = m, and inductively every label
-    // in the component equals m. Uniform root labels also make both jumps
-    // no-ops — nothing in a further batch could change any label.
-    // probe variant keeps the incoming label as `prev` so the converged
-    // test is a filter on the SAME materialized frame (no extra join), and
-    // its own min-fold is still applied — probe work is never thrown away
-    def propagateProbe(d: DataFrame): DataFrame = {
-      val neighborMin = symLoop
-        .join(d.select(col("vid").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("vid"))
-        .agg(min("label").as("nmin"))
-      d.join(neighborMin, Seq("vid"), "left")
-        .select(col("vid"), col("label").as("prev"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
+      if (!converged)
+        System.err.println(s"[graft] WARNING: connectedComponents hit maxIter=$maxIter " +
+          "with labels still changing — components with diameter > 2^maxIter may be " +
+          "returned SPLIT (recall, not precision, is at risk). Raise maxIter.")
+      // Decode + re-attach: rids back to ids with two dict joins — the label
+      // rid IS the min member's rank, so its decoded id IS the min member id
+      // (order-preserving encoding) — and every non-edge input vertex labels
+      // itself (singleton clusters).
+      val mapped = labels
+        .join(dict.df.select(col("rid").as("vid"), col("id").as("image_id")), Seq("vid"))
+        .join(dict.df.select(col("rid").as("label"), col("id").as("cluster_id")), Seq("label"))
+        .select("image_id", "cluster_id")
+      val out = vertices
+        .select(col("image_id"))
+        .join(mapped, Seq("image_id"), "left")
+        .select(col("image_id"), coalesce(col("cluster_id"), col("image_id")).as("cluster_id"))
+      CCResult(out, iter, converged)(dict :: batches)
+    } catch {
+      case e: Throwable =>
+        (dict :: batches).foreach(_.release())
+        throw e
     }
-    def propagate(d: DataFrame): DataFrame =
-      propagateProbe(d).select("vid", "label")
-    def jump(d: DataFrame): DataFrame = d
-      .join(d.select(col("vid").as("label"), col("label").as("ll")),
-        Seq("label"), "left")
-      .select(col("vid"),
-        least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
-    def round(d: DataFrame): DataFrame = jump(jump(propagate(d)))
-
-
-    var iter = 0
-    // Empty edge set → nothing propagates: skip the loop entirely instead of
-    // paying one full batch to observe it. Not just a test nicety — the
-    // tiered surface runs one CC per tier and the reference ships
-    // sigma_normal = -1 (an ALWAYS-empty normal tier), so this one limit-1
-    // job on the materialized `sym` saves ~15 shuffles per tiered query.
-    // `labels` must then stop referencing `sym` (whose blocks are freed
-    // below, and the lazy init plan scans them).
-    var converged = sym.isEmpty
-    if (converged) {
-      val spark = vertices.sparkSession
-      labels = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vid", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("label", org.apache.spark.sql.types.LongType))))
-    }
-    // blocks of the superseded batch — freed as soon as the next batch is
-    // materialized (the next batch's plan scans its OWN checkpoint, so the
-    // previous blocks are unreferenced from that point on). The FINAL
-    // batch's blocks back the returned labels and must stay.
-    var prevIds = Set.empty[Int]
-    while (!converged && iter < maxIter) {
-      val batchPlan = propagateProbe(round(round(labels)))
-      if (sys.props.contains("graft.ccdebug"))
-        println(s"[ccdebug] iter=$iter analyzed nodes=" +
-          batchPlan.queryExecution.analyzed.collect { case n => n }.size +
-          " labels nodes=" + labels.queryExecution.analyzed.collect { case n => n }.size)
-      val (next, nextIds) = materializeTracked(batchPlan)
-      val probeChanged = next.filter(col("label") =!= col("prev")).count()
-      unpersistIds(next, prevIds)
-      prevIds = nextIds
-      labels = next.select("vid", "label")
-      converged = probeChanged == 0
-      iter += 3 // two full rounds + the probe propagate per batch
-    }
-    // sym is only referenced inside the loop rounds; the returned plan
-    // bottoms out at the final batch's checkpoint + the caller's vertices.
-    // (dict blocks stay: the decode joins below reference them lazily —
-    // they are freed by the caller's session-level tracking, exactly like
-    // the final batch's label blocks.)
-    unpersistIds(sym, symIds)
-    loopSession.foreach(_ => edges.sparkSession.catalog.dropGlobalTempView(symView))
-    if (!converged)
-      System.err.println(s"[graft] WARNING: connectedComponents hit maxIter=$maxIter " +
-        "with labels still changing — components with diameter > 2^maxIter may be " +
-        "returned SPLIT (recall, not precision, is at risk). Raise maxIter.")
-    // Decode + re-attach: rids back to ids with two dict joins — the label
-    // rid IS the min member's rank, so its decoded id IS the min member id
-    // (order-preserving encoding) — and every non-edge input vertex labels
-    // itself (singleton clusters).
-    val mapped = labels
-      .join(dict.select(col("rid").as("vid"), col("id").as("image_id")), Seq("vid"))
-      .join(dict.select(col("rid").as("label"), col("id").as("cluster_id")), Seq("label"))
-      .select("image_id", "cluster_id")
-    val out = vertices
-      .select(col("image_id"))
-      .join(mapped, Seq("image_id"), "left")
-      .select(col("image_id"), coalesce(col("cluster_id"), col("image_id")).as("cluster_id"))
-    CCResult(out, iter, converged)
   }
 
   /** Cluster statistics (SURVEY.md §2.5 A2): per-cluster member count and
@@ -294,15 +257,17 @@ object Clustering {
 
   /** Two-tier clustering surface (reference high-sim vs normal-sim clone-set
     * lists, /root/reference/CloneSet.cpp:86-165, CloneSet.h:59-92): one
-    * component run per (tier, edge set), stacked with a `tier` column. The
+    * component run per (tier, edge set), stacked with a `tier` column and
+    * materialized; the per-tier CC blocks are released once it is. The
     * shipped reference config has sigma_normal = -1 (normal tier matches
     * nothing — dif_config.txt:3); callers pass a positive sigma to light the
     * tier up. Tier-split size histogram = groupBy(tier, size) downstream.
     */
   def tieredClusters(vertices: DataFrame,
                      edgesByTier: Seq[(String, DataFrame)],
-                     failOnNonConvergence: Boolean = true): DataFrame =
-    tieredClustersResults(vertices, edgesByTier).map { case (tier, cc) =>
+                     failOnNonConvergence: Boolean = true): Materialized = {
+    val results = tieredClustersResults(vertices, edgesByTier)
+    try Materialize(results.map { case (tier, cc) =>
       // surface non-convergence at this level, not just a stderr warning
       // buried in connectedComponents — a split component is a RECALL bug
       // the caller must see (round-2 ADVICE)
@@ -313,7 +278,9 @@ object Clustering {
         else System.err.println(s"[graft] WARNING: $msg")
       }
       cc.labels.withColumn("tier", lit(tier))
-    }.reduce(_.unionByName(_))
+    }.reduce(_.unionByName(_)))
+    finally results.foreach(_._2.release())
+  }
 
   /** Per-tier CC runs with full [[CCResult]]s (iterations + converged flag)
     * for callers that need the convergence state per tier.
@@ -323,10 +290,11 @@ object Clustering {
     * driver/AQE barrier latency, not task work (round-6 probe: ~36 jobs and
     * ~3-10 task-core-s per tier at sf0.1) — overlapping them hides one
     * tier's barriers behind the other's, and the later tier's tasks
-    * back-fill the earlier tier's idle cores. Safe because
-    * [[materializeTracked]] attributes checkpoint blocks from the frame's
-    * own plan (thread-confined), and Spark's scheduler handles concurrent
-    * actions from one driver natively.
+    * back-fill the earlier tier's idle cores. Safe because [[Materialize]]
+    * attributes checkpoint blocks from the frame's own plan
+    * (thread-confined), and Spark's scheduler handles concurrent actions
+    * from one driver natively. If any tier fails, every tier is awaited and
+    * the finished ones are released before the first error is rethrown.
     */
   def tieredClustersResults(vertices: DataFrame,
                             edgesByTier: Seq[(String, DataFrame)])
@@ -338,13 +306,19 @@ object Clustering {
     else {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
+      import scala.util.{Failure, Try}
       val pool = java.util.concurrent.Executors.newFixedThreadPool(edgesByTier.size)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
       try {
         val futures = edgesByTier.map { case (tier, edges) =>
           Future { tier -> connectedComponents(vertices, edges) }
         }
-        futures.map(Await.result(_, Duration.Inf))
+        val done = futures.map(f => Try(Await.result(f, Duration.Inf)))
+        done.collectFirst { case Failure(e) => e }.foreach { e =>
+          done.foreach(_.foreach(_._2.release()))
+          throw e
+        }
+        done.map(_.get)
       } finally pool.shutdown()
     }
   }

@@ -67,34 +67,23 @@ object DedupPipeline {
     val spark = images.sparkSession
     import spark.implicits._
 
-    // Stage materialization: with an Audit, stages write to parquet (the
-    // resumable checkpoint — which also truncates lineage; THE production
-    // default at scale). Without one, stages are materialized eagerly: this
-    // both pins the data (no recompute across downstream actions) and
-    // REPLACES the logical plan with a scan of the materialized RDD —
-    // essential, because the candidate generators reference each stage
-    // several times (cold/hot branches, collapse star, two LSH paths) and
-    // nesting the full upstream DAG into every branch makes Catalyst
-    // analysis time explode. Failure-recovery semantics of the no-audit
-    // path: with sparkContext.setCheckpointDir configured, stages go to the
-    // RELIABLE checkpoint store and survive executor loss; bare local mode
-    // falls back to localCheckpoint (executor-resident blocks — fine in a
-    // single-JVM sandbox, NOT the cluster default).
+    // Each stage is committed to parquet through the Audit (the resumable
+    // checkpoint, THE production default at scale) or, without one,
+    // materialized through [[Materialize]]; either way downstream stages
+    // read a scan of the stored result. The unaudited stage frames back the
+    // returned Result and stay with it. The stage's job label (guide §1.5)
+    // makes the UI/event log attributable and is restored on the way out.
     def staged(name: String)(f: => DataFrame): DataFrame = {
-      // job labels (guide §1.5) — make the UI/event log attributable
-      spark.sparkContext.setJobDescription(s"graft: stage $name")
-      val out = audit.map(_.stage(name)(f)).getOrElse {
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"graft: stage $name")
+      try audit.map(_.stage(name)(f)).getOrElse {
         val t0 = System.nanoTime()
-        val df = f
-        val cp =
-          if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-          else df.localCheckpoint(true)
+        val cp = Materialize(f).df
         if (sys.props.contains("graft.profile"))
           println(f"[profile] stage $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
         cp
-      }
-      spark.sparkContext.setJobDescription(null)
-      out
+      } finally sc.setJobDescription(outer)
     }
 
     val fpsDf = staged("fingerprints") {
@@ -119,15 +108,15 @@ object DedupPipeline {
       } else base
     }
 
-    var ccIters = -1
-    val clusters = staged("clusters") {
-      val cc = Clustering.connectedComponents(fps.toDF().select("image_id"), edges)
-      ccIters = cc.iterations
-      audit.foreach(_.log("cc_iterations", cc.iterations.toLong, 0L, committed = false,
-        detail = s"label propagation ${if (cc.converged) "converged" else "DID NOT CONVERGE"}" +
-          s" in ${cc.iterations} rounds"))
-      cc.labels
-    }
+    var cc: Option[Clustering.CCResult] = None
+    val clusters = try staged("clusters") {
+      val r = Clustering.connectedComponents(fps.toDF().select("image_id"), edges)
+      cc = Some(r)
+      audit.foreach(_.log("cc_iterations", r.iterations.toLong, 0L, committed = false,
+        detail = s"label propagation ${if (r.converged) "converged" else "DID NOT CONVERGE"}" +
+          s" in ${r.iterations} rounds"))
+      r.labels
+    } finally cc.foreach(_.release()) // the stage now holds its own copy
 
     // Terminal aggregation over two already-materialized scans: staging it
     // would add a whole extra job to every run for no reuse benefit — with
@@ -162,12 +151,12 @@ object DedupPipeline {
       }
     }
 
-    val iters =
-      if (ccIters >= 0) ccIters
-      else audit.flatMap { a => // resumed run: closure skipped, read the ledger
+    val iters = cc.map(_.iterations).orElse {
+      audit.flatMap { a => // resumed run: closure skipped, read the ledger
         scala.util.Try(a.auditRows().filter(col("stage") === "cc_iterations")
           .agg(max("rows_out")).head().getLong(0).toInt).toOption
-      }.getOrElse(-1)
+      }
+    }.getOrElse(-1)
 
     Result(fps, edges, clusters, stats, iters)
   }

@@ -50,11 +50,8 @@ object Substring {
       .collect().map(_.getInt(0))
       .foldLeft(0)((m, w) => m | (1 << (w - 1)))
     if (widthMask == 0) { // no anchors at all -> no pairs
-      return rows.sparkSession.createDataFrame(
-        rows.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("a", rows.schema("image_id").dataType),
-          org.apache.spark.sql.types.StructField("b", rows.schema("image_id").dataType))))
+      val id = rows.schema("image_id").dataType
+      return Materialize.empty(spark, "a" -> id, "b" -> id)
     }
     // anchors: 64-bit key of the first min(k, |words|)-word gram, computed
     // by the codegen'd LeadingGramKey expression in one byte scan — no

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{GraftConfig, MinHashCore, Murmur3x64, SimHashCore}
 import graft.model.FingerprintRow
-import graft.pipeline.{Candidates, Clustering, DedupPipeline, Fingerprints}
+import graft.pipeline.{Candidates, Clustering, DedupPipeline, Fingerprints, Materialize,
+  Materialized}
 
 /** The operator inventory exposed through SparkEntry (SURVEY.md §2 +
   * training-data-pipeline ops). Every SQL-expressible operator has a DuckDB
@@ -52,141 +53,93 @@ object Queries {
   val sigmaTierHigh = 3
   val sigmaTierNormal = 6
 
-  /** Tiered clusters, computed ONCE per (session, dir) and kept as a
-    * checkpointed frame: `dedup_clusters_tiered` and `dedup_tier_hist` both
-    * read it, so the histogram costs a groupBy instead of a second
-    * fingerprint + two-CC recomputation (round-2 bench: 26.6 s + 14.0 s for
-    * what is one computation plus a 0.1 s aggregate).
-    */
-  private val tieredCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, Seq[Int])]()
+  /** One shared setup's value and the one action that frees what it holds. */
+  private final case class Shared(value: AnyRef, release: () => Unit)
 
-  /** Run `f`, returning its value plus the ids of every RDD it left
-    * persisted (localCheckpoint blocks) — the eviction handle. Snapshot
-    * diff, not instrumentation: callers build their whole frame inside.
+  /** Shared setups, computed ONCE per (session, dir) and read by several
+    * queries each — whichever query touches one first pays its cost:
+    *  - `tiered`: the two-tier clusters behind `dedup_clusters_tiered` and
+    *    `dedup_tier_hist`, so the histogram is a groupBy instead of a second
+    *    fingerprint + two-CC recomputation (round 2: 26.6 s + 14.0 s for
+    *    one computation plus a 0.1 s aggregate);
+    *  - `jpairs`: the exact word-3-gram Jaccard pairs behind
+    *    `dedup_ngram_jaccard` and `dedup_pair_degree`, previously each a
+    *    full gram self-join, together the two heaviest entries of the
+    *    round-5 suite (round-5 VERDICT #2);
+    *  - `audited`: the audited full-pipeline run behind `dedup_clusters`
+    *    (its clusters) and `audit_stage_metrics` (its ledger) — round-2
+    *    VERDICT #3: the suite previously ran one full pipeline per query.
     */
-  private def trackPersists[T](s: SparkSession)(f: => T): (T, Seq[Int]) = {
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    val v = f
-    (v, (s.sparkContext.getPersistentRDDs.keySet -- before).toSeq)
+  private val shared = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String), Shared]()
+
+  private def sharedSetup[T <: AnyRef](s: SparkSession, dir: String, name: String)(
+      build: => (T, () => Unit)): T = {
+    if (shared.size > 8) evictStopped() // bound stale-session entries
+    shared.computeIfAbsent((s, dir, name), { _ =>
+      val (v, release) = build
+      Shared(v, release)
+    }).value.asInstanceOf[T]
   }
 
-  /** Free BOTH shared caches: unpersist the localCheckpoint blocks backing
-    * each tiered frame and delete each audited run's temp tables —
-    * `clear()` alone drops the map entries but leaks the blocks/dirs
+  private def sharedFrame(s: SparkSession, dir: String, name: String)(
+      build: => Materialized): DataFrame =
+    sharedSetup(s, dir, name) { val m = build; (m.df, () => m.release()) }
+
+  private def drop(stale: SparkSession => Boolean): Unit =
+    shared.keySet.forEach { k =>
+      if (stale(k._1)) Option(shared.remove(k)).foreach(_.release())
+    }
+
+  /** Free every shared setup: its checkpoint blocks and, for the audited
+    * run, its temp tables — removing the entries alone would leak both
     * (round-3 VERDICT #5). Safe to call between bench runs.
     */
-  def freeSharedCaches(): Unit = {
-    tieredCache.forEach { (k, v) =>
-      val sc = k._1.sparkContext
-      if (!sc.isStopped)
-        v._2.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    tieredCache.clear()
-    jpairsCache.forEach { (k, v) =>
-      val sc = k._1.sparkContext
-      if (!sc.isStopped)
-        v._2.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    jpairsCache.clear()
-    auditedCache.forEach { (k, v) =>
-      val sc = k._1.sparkContext
-      if (!sc.isStopped)
-        v._2.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      scala.util.Try {
-        val root = java.nio.file.Paths.get(v._1._3)
-        java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      }
-    }
-    auditedCache.clear()
-  }
+  def freeSharedCaches(): Unit = drop(_ => true)
 
   /** Bound-path eviction: drop only entries whose session is STOPPED. A
-    * full freeSharedCaches() here would unpersist localCheckpoint blocks of
-    * live frames a caller still holds — localCheckpoint lineage is not
-    * recomputable, so the caller's next action would fail on a lost block
-    * instead of recomputing (round-4 ADVICE). Live-session entries are kept
-    * even above the bound: the map is keyed by (session, dir), so a
-    * long-lived session legitimately holding >8 dirs keeps them all.
+    * full freeSharedCaches() here would unpersist checkpoint blocks of live
+    * frames a caller still holds — their lineage is not recomputable, so
+    * the caller's next action would fail on a lost block instead of
+    * recomputing (round-4 ADVICE). Live-session entries are kept even above
+    * the bound: a long-lived session legitimately holding many dirs keeps
+    * them all.
     */
-  private def evictStopped(): Unit = {
-    def stale(k: (SparkSession, String)): Boolean = k._1.sparkContext.isStopped
-    tieredCache.keySet.forEach(k => if (stale(k)) tieredCache.remove(k))
-    jpairsCache.keySet.forEach(k => if (stale(k)) jpairsCache.remove(k))
-    auditedCache.keySet.forEach { k =>
-      if (stale(k)) {
-        Option(auditedCache.remove(k)).foreach { v =>
-          scala.util.Try {
-            val root = java.nio.file.Paths.get(v._1._3)
-            java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-          }
-        }
-      }
-    }
+  private def evictStopped(): Unit = drop(_.sparkContext.isStopped)
+
+  private def deleteTree(root: java.nio.file.Path): Unit = scala.util.Try {
+    java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
   }
 
-  private def tieredFrame(s: SparkSession, dir: String): DataFrame = {
-    if (tieredCache.size > 8) evictStopped() // bound stale-session entries
-    tieredCache.computeIfAbsent((s, dir), { _ =>
-      trackPersists(s) {
-        import s.implicits._
-        val fps = Fingerprints.compute(docsAsImages(s, dir), docCfg)
-        // lineage cut: the fingerprint stage is referenced by both tiers'
-        // generators (plan-explosion gotcha)
-        val fpsC = fps.toDF().localCheckpoint(true).as[FingerprintRow]
-        val vertices = fpsC.toDF().select("image_id")
-        val tiers = Seq(
-          "high" -> Candidates.simhashPairs(fpsC, docCfg, sigmaTierHigh),
+  private def tieredFrame(s: SparkSession, dir: String): DataFrame =
+    sharedFrame(s, dir, "tiered") {
+      import s.implicits._
+      // lineage cut: the fingerprint stage is referenced by both tiers'
+      // generators (plan-explosion gotcha)
+      val fpsC = Materialize(Fingerprints.compute(docsAsImages(s, dir), docCfg).toDF())
+      try {
+        val fps = fpsC.df.as[FingerprintRow]
+        Clustering.tieredClusters(fpsC.df.select("image_id"), Seq(
+          "high" -> Candidates.simhashPairs(fps, docCfg, sigmaTierHigh),
           "normal" -> Candidates.simhashPairs(
-            fpsC, docCfg.copy(nBlocks = 8), sigmaTierNormal))
-        Clustering.tieredClusters(vertices, tiers).localCheckpoint(true)
-      }
-    })._1
-  }
-
-  /** The audited full-pipeline run, computed ONCE per (session, dir) and
-    * shared by `dedup_clusters` (the cluster output) and
-    * `audit_stage_metrics` (the ledger): the pipeline is the shared setup,
-    * each query reads its own table from it (round-2 VERDICT #3: the suite
-    * previously ran one full pipeline per query — 53 s + 21 s at sf0.1 for
-    * one computation's worth of work).
-    */
-  private val auditedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), ((DedupPipeline.Result, graft.pipeline.Audit, String), Seq[Int])]()
+            fps, docCfg.copy(nBlocks = 8), sigmaTierNormal)))
+      } finally fpsC.release()
+    }
 
   private def auditedRun(s: SparkSession, dir: String)
-      : (DedupPipeline.Result, graft.pipeline.Audit) = {
-    if (auditedCache.size > 8) evictStopped() // bound stale-session entries
-    val (v, _) = auditedCache.computeIfAbsent((s, dir), { _ =>
-      trackPersists(s) {
-        val work = java.nio.file.Files.createTempDirectory("graft-audit-q").toString
-        val audit = new graft.pipeline.Audit(s, work, runId = "audit_q")
-        val res = DedupPipeline.run(docsAsImages(s, dir), docCfg, audit = Some(audit))
-        (res, audit, work)
-      }
-    })
-    (v._1, v._2)
-  }
+      : (DedupPipeline.Result, graft.pipeline.Audit) =
+    sharedSetup(s, dir, "audited") {
+      val work = java.nio.file.Files.createTempDirectory("graft-audit-q")
+      val audit = new graft.pipeline.Audit(s, work.toString, runId = "audit_q")
+      val res =
+        try DedupPipeline.run(docsAsImages(s, dir), docCfg, audit = Some(audit))
+        catch { case e: Throwable => deleteTree(work); throw e }
+      ((res, audit), () => deleteTree(work))
+    }
 
-  /** Exact word-3-gram Jaccard pair set, computed ONCE per (session, dir)
-    * and kept checkpointed: `dedup_ngram_jaccard` (the pair listing) and
-    * `dedup_pair_degree` (its degree aggregation) read the same frame —
-    * previously each ran the full gram self-join independently, together
-    * the two heaviest entries of the round-5 suite (round-5 VERDICT #2).
-    */
-  private val jpairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, Seq[Int])]()
-
-  private def jpairsFrame(s: SparkSession, dir: String): DataFrame = {
-    if (jpairsCache.size > 8) evictStopped() // bound stale-session entries
-    jpairsCache.computeIfAbsent((s, dir), { _ =>
-      trackPersists(s) {
-        ngramJaccardPairs(documents(s, dir), n = 3, tau = 0.5).localCheckpoint(true)
-      }
-    })._1
-  }
+  private def jpairsFrame(s: SparkSession, dir: String): DataFrame =
+    sharedFrame(s, dir, "jpairs")(ngramJaccardPairs(documents(s, dir), n = 3, tau = 0.5))
 
   // ---------------------------------------------------------------- queries
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.Candidates
+import graft.pipeline.{Candidates, Materialize, Materialized}
 
 /** Text-analysis + dedup operators over the `documents` corpus — the
   * training-data-pipeline operations (dedup, quality, token stats, language
@@ -81,18 +81,25 @@ object TextOps {
     *     within-group pairs are j = 1.0 exactly — the same values the
     *     all-pairs join produced.
     *
+    * The pair frame is returned materialized; the gram-set blocks it was
+    * built from are released once it is.
+    *
     * @param hotGramCap bucket size above which gram-bucket salting applies
     *                   (tests force the hot path with a tiny cap)
     */
   def ngramJaccardPairs(docs: DataFrame, n: Int, tau: Double,
-                        hotGramCap: Int = 500): DataFrame = {
-    // (image_id, gset) — the ONLY pass over the raw text; localCheckpoint
+                        hotGramCap: Int = 500): Materialized = {
+    // (image_id, gset) — the ONLY pass over the raw text; materializing
     // pins it (collapse, sample, cold/hot join branches, sizes and the
     // star expansion all re-read these blocks at scan speed).
-    val docSets = scanFloor(docs.select(col("doc_id"), col("text")))
+    val docSets = Materialize(scanFloor(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id").as("image_id"),
-        sort_array(array_distinct(wordNgrams(toks, n))).as("gset"))
-      .localCheckpoint()
+        sort_array(array_distinct(wordNgrams(toks, n))).as("gset")))
+    try Materialize(jaccardPairs(docSets.df, tau, hotGramCap))
+    finally docSets.release()
+  }
+
+  private def jaccardPairs(docSets: DataFrame, tau: Double, hotGramCap: Int): DataFrame = {
     val (reps, star) = Candidates.collapseExact(docSets, Seq("gset"))
 
     // representative gram rows, bucket-keyed by the 64-bit gram hash; the

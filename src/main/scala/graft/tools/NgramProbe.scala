@@ -38,7 +38,7 @@ object NgramProbe {
     sys.env.get("NGRAM_PLAN_OUT").foreach { p =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
         TextOps.ngramJaccardPairs(TextOps.documents(spark, sfDir), 3, 0.5)
-          .queryExecution.explainString(
+          .df.queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       println(s"[ngramprobe] plan written to $p")
     }
@@ -66,7 +66,7 @@ object NgramProbe {
       }
       println(s"[ngramprobe] inter pairs: $inter")
       val full = t("full ngramJaccardPairs") {
-        TextOps.ngramJaccardPairs(docs, 3, 0.5).count()
+        TextOps.ngramJaccardPairs(docs, 3, 0.5).df.count()
       }
       println(s"[ngramprobe] jpairs: $full")
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))

@@ -62,8 +62,7 @@ object TieredProbe {
             Queries.docCfg.copy(nBlocks = 8), Queries.sigmaTierNormal)
         }
         val out = t("tieredClusters (2 CC runs)") {
-          Clustering.tieredClusters(vertices, Seq("high" -> high, "normal" -> normal))
-            .localCheckpoint(true)
+          Clustering.tieredClusters(vertices, Seq("high" -> high, "normal" -> normal)).df
         }
         t("count")(out.count())
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import org.apache.spark.sql.functions._
 
 import graft.core.GraftConfig
@@ -61,6 +63,51 @@ class SubstringSpec extends AnyFunSuite {
       "two" -> "ordinary hippopotamus",
       "host" -> "we saw an extraordinary hippopotamus at the river") // char substring only
     assert(Substring.substringPairs(r, k3).count() === 0)
+  }
+
+  test("width census parity: substringPairs == all-pairs word-aligned containment") {
+    // Captions with repeated, leading and trailing spaces. The width census
+    // counts words with split(" "), the gram keys with GramHash.tokenEnds;
+    // if they disagreed on a caption, the mask would drop a width some
+    // anchor has, and its pairs with it.
+    val word = Gen.oneOf("a", "to", "cat", "dog", "blue", "red", "moon", "x")
+    val gap = Gen.frequency(4 -> " ", 1 -> "  ", 1 -> "   ")
+    val edge = Gen.frequency(3 -> "", 1 -> " ", 1 -> "  ")
+    val caption = for {
+      n <- Gen.choose(1, 8)
+      ws <- Gen.listOfN(n, word)
+      gs <- Gen.listOfN(n - 1, gap)
+      lead <- edge
+      trail <- edge
+    } yield lead + ws.head + gs.zip(ws.tail).map { case (g, w) => g + w }.mkString + trail
+    // a run of another caption's space-separated tokens, spacing kept, so
+    // word-aligned containment is common
+    def runOf(c: String): Gen[String] = {
+      val toks = c.split(" ", -1)
+      for {
+        i <- Gen.choose(0, toks.length - 1)
+        j <- Gen.choose(i + 1, toks.length)
+      } yield toks.slice(i, j).mkString(" ")
+    }
+    val corpus = for {
+      base <- Gen.listOfN(12, caption)
+      runs <- Gen.listOfN(12, Gen.oneOf(base).flatMap(runOf))
+      k <- Gen.choose(1, 3)
+    } yield ((base ++ runs).zipWithIndex.map { case (c, i) => s"r$i" -> c }, k)
+
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25),
+      Prop.forAll(corpus) { case (caps, k) =>
+        val cfg = GraftConfig(shingleK = k, minSpan = 4)
+        val got = Substring.substringPairs(rows(caps: _*), cfg)
+          .collect().map(x => (x.getString(0), x.getString(1))).toSet
+        val want = (for {
+          (ia, a) <- caps; (ib, b) <- caps
+          if ia != ib && a.length > cfg.minSpan && a.length < b.length &&
+            (b.startsWith(a + " ") || b.contains(" " + a + " ") || b.endsWith(" " + a))
+        } yield (ia, ib)).toSet
+        (got == want) :| s"k=$k missing=${want -- got} extra=${got -- want}"
+      })
+    assert(res.passed, res.status.toString)
   }
 
   test("pipeline catches a substring pair invisible to SimHash and MinHash") {

@@ -37,9 +37,11 @@ class TextOpsSpec extends AnyFunSuite {
       if j >= tau
     } yield (da, db, j)).toSet
 
-  private def run(docs: Seq[(Long, String)], n: Int, tau: Double, cap: Int) =
-    TextOps.ngramJaccardPairs(docs.toDF("doc_id", "text"), n, tau, hotGramCap = cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+  private def run(docs: Seq[(Long, String)], n: Int, tau: Double, cap: Int) = {
+    val pairs = TextOps.ngramJaccardPairs(docs.toDF("doc_id", "text"), n, tau, hotGramCap = cap)
+    try pairs.df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    finally pairs.release()
+  }
 
   test("planted hot gram: salted (tiny cap) == unsalted == sequential brute force") {
     // 40 docs share the gram "red fox runs"; fillers push pairwise Jaccard
