@@ -34,7 +34,8 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     val reps = sys.env.getOrElse("BENCHX_REPS", "3").toInt
     val out = sys.env.getOrElse("BENCHX_OUT", "/root/repo/benchextra.json")
     val plansDir = sys.env.get("BENCHX_PLANS_DIR")

@@ -44,7 +44,12 @@ object DedupJob {
 
     val io = new ParquetTableIO(spark, workRoot)
     val audit = new Audit(spark, io, runId)
-    val images = DedupPipeline.ingest(spark, input)
+    // <imagesPath> is read as table `<name>` of a parquet TableIO rooted at
+    // its parent directory (qualified first, so a relative path has a parent)
+    val raw = new org.apache.hadoop.fs.Path(input)
+    val inputPath = raw.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(raw)
+    val images = DedupPipeline.ingest(
+      new ParquetTableIO(spark, inputPath.getParent.toString), inputPath.getName)
     val res = DedupPipeline.run(images, GraftConfig(), audit = Some(audit))
 
     val nRows = res.clusters.count()

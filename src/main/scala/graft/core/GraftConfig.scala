@@ -28,8 +28,6 @@ package graft.core
   * @param spanRatio      candidate span prefilter `|t1-t2| <= ratio*min` —
   *                       hard-coded 0.3 in /root/reference/SimHasher.cpp:96-99
   * @param sigmaHigh      high-tier Hamming threshold (dif_config.txt line 2 = 1)
-  * @param sigmaNormal    normal-tier threshold (dif_config.txt line 3 = -1:
-  *                       matches nothing, kept as shipped — SURVEY.md §7.1)
   * @param minhashK       MinHash signature length
   * @param rowsPerBand    LSH band height (bands = minhashK / rowsPerBand)
   * @param jaccardTau     Jaccard verification threshold for band candidates
@@ -52,7 +50,8 @@ package graft.core
   * (pure-core sweep over planted perturbation families): word-2-gram
   * shingles + tau 0.35 detect 0.97+ of 1-2-word caption edits and 100% of
   * re-encoded images with zero false pairs on 120x119/2 cross-family
-  * probes; the SimHash tier keeps the reference's shipped sigma (1 / -1).
+  * probes; the SimHash tier keeps the reference's shipped high-tier sigma
+  * (1; the shipped normal-tier -1 is [[GraftConfig.referenceSigmaNormal]]).
   * rowsPerBand=2 (32 bands of 2) makes the band-collision probability at
   * J=0.35 about 0.985 (1-(1-J^2)^32), so LSH misses are negligible next to
   * the Jaccard-verify threshold.
@@ -64,7 +63,6 @@ final case class GraftConfig(
     minSpan: Int = 12,
     spanRatio: Double = 0.3,
     sigmaHigh: Int = 1,
-    sigmaNormal: Int = -1,
     minhashK: Int = 64,
     rowsPerBand: Int = 2,
     jaccardTau: Double = 0.35,

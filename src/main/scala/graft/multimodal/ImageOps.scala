@@ -13,10 +13,8 @@ import org.apache.spark.sql.functions._
   * decoder is initialized once per partition and pixel buffers never cross
   * a shuffle — the binary column is projected ONLY into this stage; all
   * downstream dedup logic uses the extracted features. JPEG/PNG/BMP decode
-  * is real (javax.imageio, in-JDK); audio/video feature extraction is a
-  * clearly-marked deterministic stub (codec libs are not in this
-  * container) with the Spark-side plumbing — schema, batching, partition
-  * shape — fully real and tested.
+  * is real (javax.imageio, in-JDK). No audio or video codec ships with
+  * this build, so no audio/video operator is offered.
   */
 object ImageOps {
 
@@ -154,54 +152,6 @@ object ImageOps {
           } catch {
             case _: Throwable => ResizedImage(id, Array.empty, -1, -1, "png", ok = false)
           }
-        }
-      }
-  }
-
-  final case class FrameSample(
-      media_id: String, frame_idx: Int, ts_ms: Long, frame_hash: Long, stub: Boolean)
-
-  /** STUB: video frame sampling (1 row per sampled frame). Real video
-    * codecs are not in this container; the deterministic placeholder
-    * derives per-frame pseudo-hashes from the payload so the Spark shape —
-    * binary column in, EXPLODED per-frame rows out (the row-amplifying
-    * part that matters for partition sizing at scale) — is real and
-    * testable. Swap the body for a real demuxer (e.g. jcodec) in
-    * production; everything downstream (per-frame phash dedup) is already
-    * the image pipeline.
-    */
-  def frameSampleStub(media: DataFrame, everyMs: Long, maxFrames: Int): Dataset[FrameSample] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("image_id"), col("bytes")).as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          val fakeDurationMs = 1000L + (math.abs(graft.core.Murmur3x64.hash64(bytes, 11L)) % 9000L)
-          val n = math.min(maxFrames.toLong, fakeDurationMs / everyMs + 1).toInt
-          (0 until n).map { i =>
-            FrameSample(id, i, i * everyMs,
-              graft.core.Murmur3x64.hash64(bytes, 1000L + i), stub = true)
-          }
-        }
-      }
-  }
-
-  final case class AudioMeta(media_id: String, n_samples: Long, rms: Double, stub: Boolean)
-
-  /** STUB: audio feature extraction. Real codecs are not available in this
-    * container; this deterministic placeholder hashes the payload into fake
-    * but stable features so the Spark plumbing (binary column in, typed
-    * features out, partition-local batching) is real and testable. Swap the
-    * body for a real decoder (e.g. libsndfile JNI) in production.
-    */
-  def audioFeaturesStub(media: DataFrame): Dataset[AudioMeta] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("image_id"), col("bytes")).as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val h = graft.core.Murmur3x64.hash64(bytes, 7L)
-          AudioMeta(id, bytes.length.toLong, math.abs(h % 1000000) / 1e6, stub = true)
         }
       }
   }

@@ -190,24 +190,33 @@ object Candidates {
     * is the query-facing surface; the pipeline clusters on the collapsed
     * star+rep edge set, which is component-equivalent and linear.
     *
-    * @param repPairs (a, b) pairs between representative ids
+    * One join chain expands both kinds: a rep pair (a, b) becomes every
+    * (member of a, member of b), and a representative paired with itself
+    * becomes its group's clique (x < y). No dedup pass: each member has
+    * exactly one representative and the rep pairs are unique with a < b,
+    * so no two source pairs expand to the same pair and none expands to a
+    * self-pair. least/greatest keeps a < b like the all-pairs loop.
+    *
+    * @param repPairs (a, b[, extra...]) pairs between representative ids,
+    *                 unique with a < b; every extra column (e.g. a verified
+    *                 similarity) is carried onto the pair's expansion
     * @param star     (a=rep, b=member) identity edges from [[collapseExact]]
     * @param reps     representative rows (must carry `image_id`)
+    * @param within   the extra columns' values for every within-group pair,
+    *                 named like the extra columns
     */
-  def expandThroughStar(repPairs: DataFrame, star: DataFrame, reps: DataFrame): DataFrame = {
+  def expandThroughStar(repPairs: DataFrame, star: DataFrame, reps: DataFrame,
+                        within: Seq[Column] = Nil): DataFrame = {
+    val extras = repPairs.columns.filterNot(c => c == "a" || c == "b").map(col).toSeq
     val members = star.select(col("a").as("rep"), col("b").as("member"))
       .unionByName(reps.select(col("image_id").as("rep"), col("image_id").as("member")))
-    val cross = repPairs
+    val selfPairs = reps.select((col("image_id").as("a") +: col("image_id").as("b") +: within): _*)
+    repPairs.unionByName(selfPairs)
       .join(members.select(col("rep").as("a"), col("member").as("x")), "a")
       .join(members.select(col("rep").as("b"), col("member").as("y")), "b")
-      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-    val within = members.alias("m1")
-      .join(members.alias("m2"), col("m1.rep") === col("m2.rep") &&
-        col("m1.member") < col("m2.member"))
-      .select(col("m1.member").as("a"), col("m2.member").as("b"))
-    cross.unionByName(within)
-      .filter(col("a") =!= col("b"))
-      .dropDuplicates("a", "b")
+      .filter(col("a") =!= col("b") || col("x") < col("y"))
+      .select((least(col("x"), col("y")).as("a") +:
+        greatest(col("x"), col("y")).as("b") +: extras): _*)
   }
 
   /** SimHash bit-block candidate pairs, verified to Hamming <= sigma with

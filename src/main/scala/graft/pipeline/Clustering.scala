@@ -264,19 +264,15 @@ object Clustering {
     * tier up. Tier-split size histogram = groupBy(tier, size) downstream.
     */
   def tieredClusters(vertices: DataFrame,
-                     edgesByTier: Seq[(String, DataFrame)],
-                     failOnNonConvergence: Boolean = true): Materialized = {
+                     edgesByTier: Seq[(String, DataFrame)]): Materialized = {
     val results = tieredClustersResults(vertices, edgesByTier)
     try Materialize(results.map { case (tier, cc) =>
       // surface non-convergence at this level, not just a stderr warning
       // buried in connectedComponents — a split component is a RECALL bug
       // the caller must see (round-2 ADVICE)
-      if (!cc.converged) {
-        val msg = s"tieredClusters: tier '$tier' did NOT converge in " +
-          s"${cc.iterations} rounds — components may be returned split"
-        if (failOnNonConvergence) throw new IllegalStateException(msg)
-        else System.err.println(s"[graft] WARNING: $msg")
-      }
+      if (!cc.converged)
+        throw new IllegalStateException(s"tieredClusters: tier '$tier' did NOT converge in " +
+          s"${cc.iterations} rounds — components may be returned split")
       cc.labels.withColumn("tier", lit(tier))
     }.reduce(_.unionByName(_)))
     finally results.foreach(_._2.release())

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.core.GraftConfig
 import graft.model.FingerprintRow
@@ -20,20 +20,11 @@ import graft.model.FingerprintRow
   */
 object DedupPipeline {
 
-  /** Ingest + validity filter (SURVEY.md §2.2 F1): non-null id/caption and,
-    * when a bytes column exists, non-null payload. Column pruning: callers
-    * select only what they need downstream; the fingerprint stage reads
-    * (image_id, caption, phash) and never `bytes`.
-    */
-  def ingest(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    val valid =
-      if (df.columns.contains("bytes")) df.filter(col("bytes").isNotNull) else df
-    valid.filter(col("image_id").isNotNull && col("caption").isNotNull)
-  }
-
-  /** Seam-routed ingest: same validity filter, table resolved through
-    * [[graft.sources.TableIO]] (Iceberg-shaped at scale, parquet here).
+  /** Ingest + validity filter (SURVEY.md §2.2 F1), table resolved through
+    * [[graft.sources.TableIO]] (Iceberg-shaped at scale, parquet here):
+    * non-null id/caption and, when a bytes column exists, non-null payload.
+    * Column pruning: callers select only what they need downstream; the
+    * fingerprint stage reads (image_id, caption, phash) and never `bytes`.
     */
   def ingest(io: graft.sources.TableIO, table: String): DataFrame = {
     val df = io.read(table)
@@ -62,8 +53,7 @@ object DedupPipeline {
   /** Run on an already-loaded image frame. When `audit` is given, every
     * stage is checkpointed + resumable.
     */
-  def run(images: DataFrame, cfg: GraftConfig, audit: Option[Audit] = None,
-          groupCol: Option[String] = None): Result = {
+  def run(images: DataFrame, cfg: GraftConfig, audit: Option[Audit] = None): Result = {
     val spark = images.sparkSession
     import spark.implicits._
 
@@ -77,17 +67,12 @@ object DedupPipeline {
       val sc = spark.sparkContext
       val outer = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(s"graft: stage $name")
-      try audit.map(_.stage(name)(f)).getOrElse {
-        val t0 = System.nanoTime()
-        val cp = Materialize(f).df
-        if (sys.props.contains("graft.profile"))
-          println(f"[profile] stage $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        cp
-      } finally sc.setJobDescription(outer)
+      try audit.map(_.stage(name)(f)).getOrElse(Materialize(f).df)
+      finally sc.setJobDescription(outer)
     }
 
     val fpsDf = staged("fingerprints") {
-      Fingerprints.compute(images, cfg, groupCol).toDF()
+      Fingerprints.compute(images, cfg).toDF()
     }
     val fps = fpsDf.as[FingerprintRow]
 

@@ -76,8 +76,9 @@ object TextOps {
     *     exact — while a hot gram (shared by m docs, m²/2 rows through one
     *     shuffle bucket in the old shape) is capped + salted exactly like
     *     the pipeline's LSH buckets.
-    *  4. |A∪B| = |A|+|B|-∩ from the collapsed sets' sizes; members inherit
-    *     their representative's pairs (identical set ⇒ identical j), and
+    *  4. |A∪B| = |A|+|B|-∩ from the collapsed sets' sizes;
+    *     [[Candidates.expandThroughStar]] gives members their
+    *     representative's pairs (identical set ⇒ identical j), and
     *     within-group pairs are j = 1.0 exactly — the same values the
     *     all-pairs join produced.
     *
@@ -109,37 +110,22 @@ object TextOps {
       .select(col("image_id"), xxhash64(col("gram")).as("gh"), col("gram"))
     val inter = Candidates.bucketSelfJoin(keyed, Seq("gh"), hotGramCap)
       .filter(col("l_gram") === col("r_gram")) // hash buckets, strings decide
-      .groupBy(col("l_image_id").as("da"), col("r_image_id").as("db"))
+      .groupBy(col("l_image_id").as("a"), col("r_image_id").as("b"))
       .agg(count(lit(1)).as("inter"))
 
     val sizes = reps.select(col("image_id"), size(col("gset")).as("n"))
     val repPairs = inter
-      .join(sizes.toDF("da", "na"), "da")
-      .join(sizes.toDF("db", "nb"), "db")
+      .join(sizes.toDF("a", "na"), "a")
+      .join(sizes.toDF("b", "nb"), "b")
       .withColumn("j", round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
       .filter(col("j") >= tau)
-      .select("da", "db", "j")
+      .select("a", "b", "j")
 
-    // expansion through the identity star (same argument as
-    // Candidates.expandThroughStar, with j carried): each member belongs to
-    // exactly one representative, so cross pairs map 1:1 onto rep pairs (no
-    // dedup needed) and inherit j unchanged; within-group pairs are exactly
-    // the Jaccard-1 pairs of the identical-set clique. rep = min member id,
-    // so rep < member and least/greatest keeps da < db like the all-pairs
-    // join's `a.doc_id < b.doc_id`.
-    val members = star.select(col("a").as("rep"), col("b").as("member"))
-      .unionByName(reps.select(col("image_id").as("rep"), col("image_id").as("member")))
-    val cross = repPairs
-      .join(members.select(col("rep").as("da"), col("member").as("x")), "da")
-      .join(members.select(col("rep").as("db"), col("member").as("y")), "db")
-      .select(least(col("x"), col("y")).as("da"),
-        greatest(col("x"), col("y")).as("db"), col("j"))
-    val within = members.alias("m1")
-      .join(members.alias("m2"), col("m1.rep") === col("m2.rep") &&
-        col("m1.member") < col("m2.member"))
-      .select(col("m1.member").as("da"), col("m2.member").as("db"),
-        lit(1.0).as("j"))
+    // members inherit their representative's pairs with j unchanged;
+    // within-group pairs are the Jaccard-1 pairs of the identical-set
+    // clique, dropped by the filter when tau > 1
+    Candidates.expandThroughStar(repPairs, star, reps, within = Seq(lit(1.0).as("j")))
       .filter(col("j") >= tau)
-    cross.unionByName(within)
+      .select(col("a").as("da"), col("b").as("db"), col("j"))
   }
 }

@@ -3,18 +3,13 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
-import graft.pipeline.DedupPipeline
-
-/** Scaling diagnosis: runs the pipeline at several core counts and reports,
-  * per run, wall time vs TOTAL EXECUTOR TASK TIME (≈ the parallelizable
-  * work W) plus job/stage counts. wall − W/cores ≈ the serial latency floor
-  * F (driver scheduling, AQE query-stage turnaround, barriers) — the
-  * quantity the scaling-efficiency target forces down. Host-noise-robust:
-  * task time is measured work, not wall clock.
-  *
-  * Usage: runMain graft.tools.ScaleProbe <corpusDir> [cores,cores,...] [aqe]
+/** Scaling diagnosis instrument: [[ScaleProbe.Meter]] totals executor task
+  * time (≈ the parallelizable work W) plus job/stage counts, so a caller
+  * can split a run's wall time into W/cores and the serial latency floor
+  * F = wall − W/cores (driver scheduling, AQE query-stage turnaround,
+  * barriers). Host-noise-robust: task time is measured work, not wall
+  * clock. `graft.Bench` and `ClusterProbe` attach it.
   */
 object ScaleProbe {
 
@@ -57,49 +52,6 @@ object ScaleProbe {
       taskMs.set(0); cpuMs.set(0); gcMs.set(0); jobs.set(0); stages.set(0); tasks.set(0)
       shuffleWriteBytes.set(0); shuffleReadBytes.set(0)
       memSpilled.set(0); diskSpilled.set(0); peakExecMem.set(0)
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val corpus = args(0)
-    val coreList = args.lift(1).getOrElse("32,8").split(",").map(_.trim.toInt).toSeq
-    val aqe = args.lift(2).getOrElse("true")
-    val partsOverride = args.lift(3).map(_.toInt)
-    coreList.foreach { cores =>
-      val builder = SparkSession.builder()
-        .master(s"local[$cores]")
-        .appName(s"graft-probe-$cores")
-        .config("spark.sql.shuffle.partitions",
-          partsOverride.getOrElse(cores).toString)
-      sys.env.get("GRAFT_LOCAL_DIR").foreach(d => builder.config("spark.local.dir", d))
-      val spark = builder
-        .config("spark.sql.adaptive.enabled", aqe)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val meter = new Meter
-      spark.sparkContext.addSparkListener(meter)
-      try {
-        (1 to 3).foreach { i =>
-          meter.reset()
-          val images = spark.read.parquet(s"$corpus/images")
-          val t0 = System.nanoTime()
-          val res = DedupPipeline.run(images, graft.core.GraftConfig())
-          val n = res.clusters.count()
-          val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(500) // let the listener bus drain
-          val w = meter.taskMs.get() / 1000.0
-          println(f"[probe] cores=$cores aqe=$aqe run=$i wall=$wall%.1fs " +
-            f"taskTime=$w%.0f core-s gc=${meter.gcMs.get() / 1000.0}%.0fs " +
-            f"util=${w / (wall * cores) * 100}%.0f%% serialF=${wall - w / cores}%.1fs " +
-            f"jobs=${meter.jobs.get()} stages=${meter.stages.get()} rows=$n")
-          // free this rep's localCheckpoint blocks — accumulated blocks
-          // GC-thrash later reps (same hazard Bench.run1 guards against:
-          // measured 37-48 s GC on rep 2-3 at 1M images without this)
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        }
-      } finally spark.stop()
     }
   }
 }

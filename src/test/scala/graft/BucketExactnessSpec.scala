@@ -109,11 +109,18 @@ class BucketExactnessSpec extends AnyFunSuite {
     val fps = graft.pipeline.Fingerprints.compute(images, GraftConfig())
       .toDF().localCheckpoint(true).as[FingerprintRow](
         org.apache.spark.sql.Encoders.product[FingerprintRow])
-    val derived = collectPairs(
-      Candidates.bandPairs(fps, GraftConfig(), expandPairs = true, minhashDerived = true)).toSet
-    val shuffled = collectPairs(
-      Candidates.bandPairs(fps, GraftConfig(), expandPairs = true)).toSet
-    assert(derived === shuffled)
+    val derivedRows = collectPairs(
+      Candidates.bandPairs(fps, GraftConfig(), expandPairs = true, minhashDerived = true))
+    val shuffledRows = collectPairs(
+      Candidates.bandPairs(fps, GraftConfig(), expandPairs = true))
+    // the exact dups engage the collapse, so these pin the star expansion
+    // itself: no duplicate and no self-pair
+    Seq(derivedRows, shuffledRows).foreach { rows =>
+      assert(rows.distinct.length === rows.length, "duplicate pairs emitted")
+      assert(rows.forall { case (a, b) => a < b }, "pair not ordered a < b")
+    }
+    val derived = derivedRows.toSet
+    assert(derived === shuffledRows.toSet)
     assert(derived.nonEmpty, "fixture must produce band pairs or the test is vacuous")
   }
 

@@ -47,29 +47,6 @@ class MultimodalSpec extends AnyFunSuite {
       assert(back != null && back.getWidth === r.w && back.getHeight === r.h)
     }
   }
-
-  test("frame-sample stub explodes deterministic per-frame rows") {
-    val sample = corpus._1.limit(10)
-    val a = ImageOps.frameSampleStub(sample, everyMs = 500, maxFrames = 8).collect()
-    val b = ImageOps.frameSampleStub(sample, everyMs = 500, maxFrames = 8).collect()
-    assert(a.map(f => (f.media_id, f.frame_idx, f.frame_hash)).toSet ===
-      b.map(f => (f.media_id, f.frame_idx, f.frame_hash)).toSet)
-    assert(a.forall(_.stub))
-    val perMedia = a.groupBy(_.media_id)
-    assert(perMedia.size === 10)
-    perMedia.values.foreach { fs =>
-      assert(fs.length >= 2 && fs.length <= 8)
-      assert(fs.map(_.frame_idx).sorted.toSeq === (0 until fs.length))
-      assert(fs.forall(f => f.ts_ms === f.frame_idx * 500L))
-    }
-  }
-
-  test("audio stub produces stable deterministic features over binary payloads") {
-    val a = ImageOps.audioFeaturesStub(corpus._1.limit(20)).collect()
-    val b = ImageOps.audioFeaturesStub(corpus._1.limit(20)).collect()
-    assert(a.map(_.rms).toSeq === b.map(_.rms).toSeq)
-    assert(a.forall(_.stub))
-  }
 }
 
 class StreamingSpec extends AnyFunSuite {

@@ -253,7 +253,7 @@ class InvariantSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val tmp = java.nio.file.Files.createTempDirectory("graft-inv").toString
     val (img, _) = SyntheticImages.materialize(spark, tmp, nFamilies = 20)
-    val back = DedupPipeline.ingest(spark, tmp + "/images")
+    val back = DedupPipeline.ingest(new graft.sources.ParquetTableIO(spark, tmp), "images")
     val orig = img.select("image_id", "caption").orderBy("image_id").collect()
     val after = back.select("image_id", "caption").orderBy("image_id").collect()
     assert(after === orig)

@@ -39,8 +39,10 @@ class TextOpsSpec extends AnyFunSuite {
 
   private def run(docs: Seq[(Long, String)], n: Int, tau: Double, cap: Int) = {
     val pairs = TextOps.ngramJaccardPairs(docs.toDF("doc_id", "text"), n, tau, hotGramCap = cap)
-    try pairs.df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    finally pairs.release()
+    val rows = try pairs.df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      finally pairs.release()
+    assert(rows.map(r => (r._1, r._2)).distinct.length === rows.length, "duplicate pairs emitted")
+    rows.toSet
   }
 
   test("planted hot gram: salted (tiny cap) == unsalted == sequential brute force") {
