@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.sources.{ParquetTableIO, TableIO}
 
@@ -37,7 +38,9 @@ final class Audit(spark: SparkSession, val io: TableIO, runId: String) {
   def auditRows(): DataFrame = io.read(auditTable)
 
   /** Run-or-resume one stage. The compute closure is only invoked when the
-    * stage has no committed output yet.
+    * stage has no committed output yet. A computed stage costs the write
+    * alone: its row count is observed on the written frame, and the table
+    * is read back with the written schema, so without inference.
     */
   def stage(name: String)(compute: => DataFrame): DataFrame = {
     if (io.isCommitted(name)) {
@@ -45,11 +48,12 @@ final class Audit(spark: SparkSession, val io: TableIO, runId: String) {
       io.read(name)
     } else {
       val t0 = System.nanoTime()
-      io.overwrite(compute, name)
-      val persisted = io.read(name)
-      val n = persisted.count()
+      val df = compute
+      val rows = Observation()
+      io.overwrite(df.observe(rows, count(lit(1)).as("n")), name)
+      val n = rows.get("n").asInstanceOf[Long]
       log(name, n, (System.nanoTime() - t0) / 1000000L, committed = true)
-      persisted
+      io.read(name, df.schema)
     }
   }
 }

@@ -13,7 +13,7 @@ import graft.model.FingerprintRow
   *        → connected components → cluster stats → sinks + audit.
   *
   * Every stage is DataFrame/Dataset algebra (no RDDs); the only driver-side
-  * loop is the CC iteration barrier. Input contract is BASELINE.json
+  * loop is the CC round loop. Input contract is BASELINE.json
   * `input_hint`'s image table; `run` also accepts any table exposing
   * (image_id, caption, phash) — e.g. the documents corpus with a derived
   * phash — because the pipeline never touches pixel bytes after validation.
@@ -57,19 +57,27 @@ object DedupPipeline {
     val spark = images.sparkSession
     import spark.implicits._
 
+    // Every job runs under its stage's label (guide §1.5), which makes the
+    // UI/event log attributable; the caller's label is restored on the way
+    // out.
+    def labelled[T](name: String)(body: => T): T = {
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"graft: stage $name")
+      try body
+      finally sc.setJobDescription(outer)
+    }
+
     // Each stage is committed to parquet through the Audit (the resumable
     // checkpoint, THE production default at scale) or, without one,
     // materialized through [[Materialize]]; either way downstream stages
     // read a scan of the stored result. The unaudited stage frames back the
-    // returned Result and stay with it. The stage's job label (guide §1.5)
-    // makes the UI/event log attributable and is restored on the way out.
-    def staged(name: String)(f: => DataFrame): DataFrame = {
-      val sc = spark.sparkContext
-      val outer = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"graft: stage $name")
-      try audit.map(_.stage(name)(f)).getOrElse(Materialize(f).df)
-      finally sc.setJobDescription(outer)
-    }
+    // returned Result and stay with it.
+    def staged(name: String)(f: => DataFrame): DataFrame =
+      labelled(name)(audit.map(_.stage(name)(f)).getOrElse(Materialize(f).df))
+    // a stage that is only ever committed, never materialized on its own
+    def committed(a: Audit, name: String)(f: => DataFrame): DataFrame =
+      labelled(name)(a.stage(name)(f))
 
     val fpsDf = staged("fingerprints") {
       Fingerprints.compute(images, cfg).toDF()
@@ -98,7 +106,7 @@ object DedupPipeline {
       val r = Clustering.connectedComponents(fps.toDF().select("image_id"), edges)
       cc = Some(r)
       audit.foreach(_.log("cc_iterations", r.iterations.toLong, 0L, committed = false,
-        detail = s"label propagation ${if (r.converged) "converged" else "DID NOT CONVERGE"}" +
+        detail = s"star contraction ${if (r.converged) "converged" else "DID NOT CONVERGE"}" +
           s" in ${r.iterations} rounds"))
       r.labels
     } finally cc.foreach(_.release()) // the stage now holds its own copy
@@ -107,7 +115,7 @@ object DedupPipeline {
     // would add a whole extra job to every run for no reuse benefit — with
     // an Audit it still commits (resume contract); otherwise it stays lazy
     // and computes on first access.
-    val stats = audit.map(a => a.stage("cluster_stats") {
+    val stats = audit.map(a => committed(a, "cluster_stats") {
       Clustering.clusterStats(clusters, fpsDf)
     }).getOrElse(Clustering.clusterStats(clusters, fpsDf))
 
@@ -125,11 +133,11 @@ object DedupPipeline {
       val hexFp = (if (cfg.bits == 128)
         concat(hexHi, lpad(hex(col("simhash_lo")), 16, "0"))
       else hexHi).as("simhash_hex")
-      a.stage("debug_fingerprints") {
+      committed(a, "debug_fingerprints") {
         fpsDf.select(col("image_id"), hexFp, col("span"),
           size(col("grams")).as("n_grams"), col("group"))
       }
-      a.stage("debug_cluster_info") {
+      committed(a, "debug_cluster_info") {
         dupClusters(clusters)
           .join(fpsDf.select(col("image_id"), hexFp, col("span")), "image_id")
           .select("cluster_id", "cluster_size", "image_id", "simhash_hex", "span")
@@ -138,8 +146,8 @@ object DedupPipeline {
 
     val iters = cc.map(_.iterations).orElse {
       audit.flatMap { a => // resumed run: closure skipped, read the ledger
-        scala.util.Try(a.auditRows().filter(col("stage") === "cc_iterations")
-          .agg(max("rows_out")).head().getLong(0).toInt).toOption
+        labelled("clusters")(scala.util.Try(a.auditRows().filter(col("stage") === "cc_iterations")
+          .agg(max("rows_out")).head().getLong(0).toInt).toOption)
       }
     }.getOrElse(-1)
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table read/write/commit seam (SURVEY.md §7.4).
   *
@@ -20,6 +21,11 @@ trait TableIO {
     * absence is an expected state (resume probes).
     */
   def read(table: String): DataFrame
+
+  /** Read a committed table whose schema the caller already knows (it just
+    * wrote it): no schema inference, so no job.
+    */
+  def read(table: String, schema: StructType): DataFrame
 
   /** Overwrite-commit: replaces the table; visible only once committed. */
   def overwrite(df: DataFrame, table: String): Unit
@@ -43,6 +49,9 @@ final class ParquetTableIO(spark: SparkSession, root: String) extends TableIO {
   private def path(table: String) = s"$root/$table"
 
   override def read(table: String): DataFrame = spark.read.parquet(path(table))
+
+  override def read(table: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path(table))
 
   override def overwrite(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path(table))

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.rdd.RDD
@@ -81,20 +82,55 @@ class OwnershipSpec extends AnyFunSuite {
     } finally sc.setJobDescription(null)
   }
 
+  test("every job of an audited run with debug dumps carries its stage label") {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val input = images
+    val group = s"stage-labels-${System.nanoTime()}"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.add(String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    // the group's description is the caller's label: a job left unlabelled
+    // by the pipeline carries it
+    sc.setJobGroup(group, "caller label")
+    try {
+      val audit = new Audit(spark, s"$tmp/audit-labels", runId = "labels")
+      DedupPipeline.run(input, GraftConfig(debugDump = true), Some(audit))
+      // one listener sees events in order: once the sentinel job is seen,
+      // so is every job started before it
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1)).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally { sc.clearJobGroup(); sc.setJobDescription(null); sc.removeSparkListener(listener) }
+    val labels = seen.asScala.toSeq.filter(_ != "sentinel")
+    assert(labels.nonEmpty)
+    assert(labels.forall(_.startsWith("graft: stage ")),
+      s"jobs without a stage label: ${labels.filterNot(_.startsWith("graft: stage ")).distinct}")
+    for (stage <- Seq("clusters", "cluster_stats", "debug_fingerprints", "debug_cluster_info"))
+      assert(labels.contains(s"graft: stage $stage"), s"no job labelled $stage")
+  }
+
   test("two CC tiers cancelled mid-run leave no blocks and no global temp view") {
     import spark.implicits._
     val sc = spark.sparkContext
-    // two 300-vertex paths: several batches each, so most jobs are loop jobs
+    // two 300-vertex paths: several rounds each, so most jobs are round jobs
     def path(p: String) = (0 until 300).map(i => f"$p$i%04d")
     val vertices = (path("a") ++ path("b")).toDF("image_id")
     val tiers = Seq("a", "b").map(p => p -> path(p).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("a", "b"))
     def globalViews() = spark.catalog.listTables("global_temp").collect().map(_.name).toSet
 
     // The tier threads inherit the job group; from its Nth job on, every job
-    // of the group is cancelled, whichever tier runs it. Both tiers run 14
-    // jobs: N = 8 fails the dictionary's checkpoint, 19 the empty-edge
-    // probe, 21 and 25 the first and second batch, 23 the first probe.
-    for (n <- Seq(8, 19, 21, 23, 25)) {
+    // of the group is cancelled, whichever tier runs it. Each tier first
+    // checkpoints its oriented edges (jobs 1-2), then runs 10 rounds, one
+    // job each (jobs 3-22, interleaved), then the stacked labels are
+    // materialized in 6 jobs: N = 2 fails an edge checkpoint, 3 a first
+    // round, 12 a middle one, 22 the last one, 23 and 25 the label join.
+    for (n <- Seq(2, 3, 12, 22, 23, 25)) {
       val group = s"cc-fault-$n-${System.nanoTime()}"
       val started = new AtomicInteger()
       val listener = new SparkListener {
@@ -106,7 +142,7 @@ class OwnershipSpec extends AnyFunSuite {
       val viewsBefore = globalViews()
       sc.addSparkListener(listener)
       sc.setJobGroup(group, "CC fault injection")
-      try intercept[Exception](Clustering.tieredClustersResults(vertices, tiers))
+      try intercept[Exception](Clustering.tieredClusters(vertices, tiers))
       finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
       assert(persisted() === rddsBefore, s"cancelled at job $n: blocks left behind")
       assert(globalViews() === viewsBefore, s"cancelled at job $n: temp view left behind")

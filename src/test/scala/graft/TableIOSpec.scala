@@ -27,6 +27,20 @@ class TableIOSpec extends AnyFunSuite {
     assert(!io.isCommitted("t2"), "uncommitted dir must read as absent")
   }
 
+  test("a read with the written schema equals the inferred read") {
+    val root = java.nio.file.Files.createTempDirectory("graft-tio4").toString
+    val io = new ParquetTableIO(spark, root)
+    // non-nullable top-level and nested fields: the file source reads every
+    // field back as nullable, whichever schema it is given
+    val df = Seq(("a", 1, Seq(1L, 2L)), ("b", 2, Seq.empty[Long])).toDF("k", "v", "xs")
+      .withColumn("s", org.apache.spark.sql.functions.struct($"v", $"xs"))
+    io.overwrite(df, "t")
+    val known = io.read("t", df.schema)
+    val inferred = io.read("t")
+    assert(known.schema === inferred.schema)
+    assert(known.orderBy("k").collect() === inferred.orderBy("k").collect())
+  }
+
   test("append accumulates rows (the audit-ledger primitive)") {
     val root = java.nio.file.Files.createTempDirectory("graft-tio2").toString
     val io = new ParquetTableIO(spark, root)
