@@ -30,7 +30,7 @@ package graft.core
   * NOT thread-safe (single owner per instance): the Spark stage creates one
   * per partition iterator, the oracle one per call.
   */
-final class FingerprintHasher(cfg: GraftConfig, perms: Array[Long]) {
+final class FingerprintHasher(cfg: GraftConfig) {
   import FingerprintHasher._
 
   private val k = cfg.shingleK
@@ -48,12 +48,12 @@ final class FingerprintHasher(cfg: GraftConfig, perms: Array[Long]) {
   private var wordH2 = new Array[Long](64)
   private var gramH = new Array[Long](64)
 
-  /** Result of one row's fold. `minhash`/`grams` are fresh per-row arrays
-    * (they live on in the output row); everything else was folded through
-    * the reusable scratch state.
+  /** Result of one row's fold. `grams` is a fresh per-row array (it lives
+    * on in the output row); everything else was folded through the reusable
+    * scratch state.
     */
-  final case class Fp(simhash: Long, simhashLo: Long, minhash: Array[Long],
-                      grams: Array[Long], span: Int, norm: String)
+  final case class Fp(simhash: Long, simhashLo: Long, grams: Array[Long],
+                      span: Int, norm: String)
 
   def fingerprint(caption: String, phash: Long): Fp = {
     val norm = Shingling.normalize(caption)
@@ -173,7 +173,7 @@ final class FingerprintHasher(cfg: GraftConfig, perms: Array[Long]) {
       if (is128) SimHashCore.finish128(sums)
       else (SimHashCore.finish64(sums), 0L)
 
-    // ---- distinct sorted gram hashes + MinHash signature ----
+    // ---- distinct sorted gram hashes ----
     java.util.Arrays.sort(gramH, 0, nGrams)
     var m = 0
     g = 0
@@ -181,10 +181,7 @@ final class FingerprintHasher(cfg: GraftConfig, perms: Array[Long]) {
       if (g == 0 || gramH(g) != gramH(g - 1)) { gramH(m) = gramH(g); m += 1 }
       g += 1
     }
-    val grams = java.util.Arrays.copyOfRange(gramH, 0, m)
-    val sig = MinHashCore.signature(grams, 0, m, perms)
-
-    Fp(hi, lo, sig, grams, norm.length, norm)
+    Fp(hi, lo, java.util.Arrays.copyOfRange(gramH, 0, m), norm.length, norm)
   }
 }
 

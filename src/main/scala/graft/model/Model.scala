@@ -16,15 +16,15 @@ final case class ImageRow(
 /** Per-row fingerprint record — the analogue of the reference FingerPrint
   * (/root/reference/EigenWord.h:97-129): simhash (64-bit fingerprint, or
   * the HI word in 128-bit mode with `simhash_lo` carrying the LO word —
-  * GraftConfig.bits), minhash signature, char-span (`m_token_num`
+  * GraftConfig.bits), the distinct gram hashes, char-span (`m_token_num`
   * analogue), and a group key (file analogue, used by the same/diff-group
-  * compare modes).
+  * compare modes). No MinHash signature is stored: it is a pure function of
+  * `grams`, and the band pass computes it per collapse representative.
   */
 final case class FingerprintRow(
     image_id: String,
     simhash: Long,
-    minhash: Array[Long],
-    grams: Array[Long], // distinct k-gram hashes, for exact Jaccard verify
+    grams: Array[Long], // distinct sorted k-gram hashes: band keys + exact Jaccard verify
     span: Int,
     group: String,
     simhash_lo: Long = 0L, // 128-bit mode only; 0 in 64-bit mode

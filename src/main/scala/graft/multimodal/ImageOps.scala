@@ -90,31 +90,6 @@ object ImageOps {
       }
   }
 
-  /** PSNR between two decoded images (test invariant per input_hint). */
-  def psnr(a: Array[Byte], b: Array[Byte]): Double = {
-    val ia = ImageIO.read(new ByteArrayInputStream(a))
-    val ib = ImageIO.read(new ByteArrayInputStream(b))
-    require(ia.getWidth == ib.getWidth && ia.getHeight == ib.getHeight, "dim mismatch")
-    var mse = 0.0
-    var y = 0
-    while (y < ia.getHeight) {
-      var x = 0
-      while (x < ia.getWidth) {
-        val pa = ia.getRGB(x, y); val pb = ib.getRGB(x, y)
-        var sh = 0
-        while (sh <= 16) {
-          val d = ((pa >> sh) & 0xff) - ((pb >> sh) & 0xff)
-          mse += d * d
-          sh += 8
-        }
-        x += 1
-      }
-      y += 1
-    }
-    mse /= (ia.getWidth * ia.getHeight * 3.0)
-    if (mse == 0) Double.PositiveInfinity else 10 * math.log10(255.0 * 255.0 / mse)
-  }
-
   final case class ResizedImage(
       image_id: String, bytes: Array[Byte], w: Int, h: Int, fmt: String, ok: Boolean)
 

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
-import graft.core.{GraftConfig, SimHashCore}
+import graft.core.{GraftConfig, MinHashCore, SimHashCore}
 import graft.model.FingerprintRow
 
 /** Candidate generation + verification (SURVEY.md §2.4 J2-J4, §2.7).
@@ -240,9 +240,9 @@ object Candidates {
       // span-compatible by construction — unless a group compare mode needs
       // per-row group checks. Project to the five columns this pass reads
       // BEFORE the collapse: the groupBy+join-back shuffles every row, and
-      // the full fingerprint row is ~1 KB (minhash + gram arrays +
-      // caption_norm) vs ~50 B for the simhash columns — a 20x shuffle-byte
-      // cut on the heaviest all-rows exchange of the pipeline.
+      // the full fingerprint row carries the gram array and caption_norm
+      // (a few hundred bytes) vs ~50 B for the simhash columns — the
+      // heaviest all-rows exchange of the pipeline stays narrow.
       val groupMode = onlyDiffGroup || onlySameGroup
       val narrow = fps.toDF().select(
         col("image_id"), col("simhash"), col("simhash_lo"), col("span"), col("group"))
@@ -277,36 +277,27 @@ object Candidates {
   /** MinHash band candidate pairs, verified by exact Jaccard >= tau.
     *
     * Candidate generation is KEY-ONLY: the bucket self-join shuffles just
-    * (image_id, bandIdx, bandHash) rows — the gram arrays (the heavy
+    * (image_id, bandIdx, bandKey) rows — the gram arrays (the heavy
     * payload) are joined back onto the deduplicated pair list afterwards,
     * so at 10^12 scale the wide data crosses the wire once per verified
     * candidate instead of once per band replica.
-    */
-  /** @param minhashDerived caller guarantees the input rows' minhash column
-    *   IS `MinHashCore.signature(grams, permutations(cfg.minhashK, cfg.seed))`
-    *   — true for everything the fingerprint stage produced (both paths
-    *   compute it exactly so; FastFingerprintSpec pins them identical). The
-    *   pass then does NOT shuffle the minhash column through the collapse
-    *   (64 longs = 512 B/row, ~4x the grams array — round-6 JobTrace: the
-    *   band collapse was the pipeline's largest shuffle WRITE at 1M images)
-    *   and recomputes the signature per REPRESENTATIVE from its gram set —
-    *   bit-identical, the signature being a pure order-insensitive min-fold
-    *   — for ~1/5 the exchange bytes. With false (default), minhash is an
-    *   independent input and rides the shuffle (the general contract
-    *   BucketExactnessSpec exercises with synthetic lanes).
+    *
+    * @param minhashDerived kept only for source compatibility with
+    *   `perfbench/src/perfbench/Layers.scala`; must be true.
     */
   def bandPairs(fps: Dataset[FingerprintRow], cfg: GraftConfig,
                 expandPairs: Boolean = false,
-                minhashDerived: Boolean = false): DataFrame = {
+                minhashDerived: Boolean = true): DataFrame = {
+    require(minhashDerived, "the band pass always derives signatures from grams")
     // collapse identical gram sets (Jaccard 1 by construction) to one
     // representative each — a mega-group of equal captions costs O(|group|).
-    // Projected to the columns this pass reads (id, grams for key+verify
-    // [, minhash unless derived]) before the all-rows collapse shuffle.
-    val collapseCols =
-      if (minhashDerived) fps.toDF().select(col("image_id"), col("grams"))
-      else fps.toDF().select(col("image_id"), col("grams"), col("minhash"))
-    val (reps, star) = collapseExact(collapseCols, Seq("grams"))
-    // band key = the shared core's folded 64-bit band hash
+    // Projected to the columns this pass reads (id, grams for key+verify)
+    // before the all-rows collapse shuffle.
+    val (reps, star) = collapseExact(
+      fps.toDF().select(col("image_id"), col("grams")), Seq("grams"))
+    // The signature is a pure, order-insensitive min-fold of the gram set,
+    // so it is computed here, once per REPRESENTATIVE, and never stored or
+    // shuffled. Band key = the shared core's folded 64-bit band hash
     // (MinHashCore.bandHashes — band index mixed into the fold), not the
     // raw lane array: the exploded key rows are the self-join's shuffle
     // payload (nBands rows per rep), and a bigint key shuffles ~40% fewer
@@ -315,31 +306,20 @@ object Candidates {
     // written at 257k images). A fold collision (p ~ 2^-64 per bucket
     // pair) can only ADD a candidate, which the exact-Jaccard verify
     // rejects — the verified output is identical to lane-array banding.
-    // Computed in a narrow typed map over (id, minhash) only — no wide
-    // decode of the fingerprint row.
     val rpb = cfg.rowsPerBand
     val minhashK = cfg.minhashK
     val seed = cfg.seed
     val spark0 = fps.sparkSession
     import spark0.implicits._
-    val bandRows =
-      if (minhashDerived)
-        reps.select(col("image_id"), col("grams"))
-          .as[(String, Array[Long])]
-          .mapPartitions { iter =>
-            // same permutation table the fingerprint stage used (pure
-            // function of cfg) — the rep's recomputed signature is
-            // bit-identical to its shuffled-away column
-            val perms = graft.core.MinHashCore.permutations(minhashK, seed)
-            iter.map { case (id, grams) =>
-              (id, graft.core.MinHashCore.bandHashes(
-                graft.core.MinHashCore.signature(grams, 0, grams.length, perms), rpb))
-            }
-          }
-      else
-        reps.select(col("image_id"), col("minhash"))
-          .as[(String, Array[Long])]
-          .map { case (id, mh) => (id, graft.core.MinHashCore.bandHashes(mh, rpb)) }
+    val bandRows = reps.select(col("image_id"), col("grams"))
+      .as[(String, Array[Long])]
+      .mapPartitions { iter =>
+        val perms = MinHashCore.permutations(minhashK, seed)
+        iter.map { case (id, grams) =>
+          (id, MinHashCore.bandHashes(
+            MinHashCore.signature(grams, 0, grams.length, perms), rpb))
+        }
+      }
     val keyed = bandRows
       .toDF("image_id", "bandhashes")
       .select(col("image_id"),
@@ -366,14 +346,10 @@ object Candidates {
     else verified.unionByName(star)
   }
 
-  /** Union of all generators + pair-level dedup (SURVEY.md §2.7). The
-    * pipeline's fps rows come from the fingerprint stage, whose minhash is
-    * derived from the gram set by construction — the band pass may
-    * recompute it per representative instead of shuffling it.
-    */
+  /** Union of all generators + pair-level dedup (SURVEY.md §2.7). */
   def allCandidates(fps: Dataset[FingerprintRow], cfg: GraftConfig): DataFrame = {
     val sim = simhashPairs(fps, cfg, cfg.sigmaHigh).withColumn("source", lit("simhash"))
-    val band = bandPairs(fps, cfg, minhashDerived = true)
+    val band = bandPairs(fps, cfg)
       .withColumn("source", lit("minhash_band"))
     sim.unionByName(band)
       .groupBy("a", "b").agg(min("source").as("source"))

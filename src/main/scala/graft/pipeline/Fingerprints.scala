@@ -31,7 +31,7 @@ object Fingerprints {
     * FastFingerprintSpec pins the two bit-identical over generated inputs.
     */
   def fingerprintOf(imageId: String, caption: String, phash: Long, group: String,
-                    cfg: GraftConfig, perms: Array[Long]): FingerprintRow = {
+                    cfg: GraftConfig): FingerprintRow = {
     val norm = Shingling.normalize(caption)
     val sh = Shingling.shingles(norm, phash, cfg)
     val (simhash, simhashLo) =
@@ -45,10 +45,8 @@ object Fingerprints {
         while (i < sh.length) { SimHashCore.addShingle64(sums, sh(i).word, sh(i).weight); i += 1 }
         (SimHashCore.finish64(sums), 0L)
       }
-    val grams = Shingling.minhashTokenHashes(norm, cfg)
-    val sig = MinHashCore.signature(grams, perms)
-    FingerprintRow(imageId, simhash, sig, grams.sorted, Shingling.span(norm), group,
-      simhashLo, norm)
+    FingerprintRow(imageId, simhash, Shingling.minhashTokenHashes(norm, cfg).sorted,
+      Shingling.span(norm), group, simhashLo, norm)
   }
 
   /** Fingerprint stage: reads ONLY (image_id, caption, phash[, group]) —
@@ -60,7 +58,6 @@ object Fingerprints {
       : Dataset[FingerprintRow] = {
     val spark = images.sparkSession
     import spark.implicits._
-    val perms = MinHashCore.permutations(cfg.minhashK, cfg.seed)
     val cols = Seq(col("image_id"), col("caption"), col("phash")) ++
       groupCol.map(c => col(c).cast("string").as("group"))
     val withGroup = if (groupCol.isDefined) images.select(cols: _*)
@@ -70,11 +67,10 @@ object Fingerprints {
       .mapPartitions { iter =>
         // one scratch-buffer hasher per partition (allocation-free hot loop;
         // bit-identical to fingerprintOf — FastFingerprintSpec)
-        val hasher = new FingerprintHasher(cfg, perms)
+        val hasher = new FingerprintHasher(cfg)
         iter.map { case (id, cap, ph, grp) =>
           val fp = hasher.fingerprint(cap, ph)
-          FingerprintRow(id, fp.simhash, fp.minhash, fp.grams, fp.span, grp,
-            fp.simhashLo, fp.norm)
+          FingerprintRow(id, fp.simhash, fp.grams, fp.span, grp, fp.simhashLo, fp.norm)
         }
       }
       .filter(_.span > cfg.minSpan) // strict '>' like the reference gate

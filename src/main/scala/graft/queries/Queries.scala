@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftConfig, MinHashCore, Murmur3x64, SimHashCore}
+import graft.core.GraftConfig
 import graft.model.FingerprintRow
 import graft.pipeline.{Candidates, Clustering, DedupPipeline, Fingerprints, Materialize,
   Materialized}
@@ -27,15 +27,13 @@ object Queries {
   /** Documents corpus presented in the image-pipeline's input shape so the
     * dedup pipeline runs unchanged on text: caption := text, phash := 0
     * (payload-fusion disabled via weight PHASH=0 — text has no pixels).
+    * `extra` columns are carried through as they are.
     */
-  private def docsAsImages(docs: DataFrame): DataFrame =
-    docs.select(
+  private def docsAsImages(spark: SparkSession, dir: String, extra: Column*): DataFrame =
+    documents(spark, dir).select(Seq(
       col("doc_id").cast("string").as("image_id"),
       col("text").as("caption"),
-      lit(0L).as("phash"))
-
-  private def docsAsImages(spark: SparkSession, dir: String): DataFrame =
-    docsAsImages(documents(spark, dir))
+      lit(0L).as("phash")) ++ extra: _*)
 
   /** Text-mode config: phash tokens weighted 0 (no payload), word-3-gram
     * shingles, sigma wide enough for 1-2 word edits on ~40-word docs.
@@ -58,6 +56,8 @@ object Queries {
 
   /** Shared setups, computed ONCE per (session, dir) and read by several
     * queries each — whichever query touches one first pays its cost:
+    *  - `fps`: the documents' [[docCfg]] fingerprints behind the four
+    *    simhash/minhash doc queries and the tiered setup (see [[docFps]]);
     *  - `tiered`: the two-tier clusters behind `dedup_clusters_tiered` and
     *    `dedup_tier_hist`, so the histogram is a groupBy instead of a second
     *    fingerprint + two-CC recomputation (round 2: 26.6 s + 14.0 s for
@@ -112,20 +112,30 @@ object Queries {
       .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
   }
 
-  private def tieredFrame(s: SparkSession, dir: String): DataFrame =
+  /** The documents fingerprinted with [[docCfg]], one frame per (session,
+    * dir). The group is the document's `source`, which
+    * `dedup_simhash_pairs_diffgroup` compares; everywhere else the group
+    * only narrows the simhash collapse key, so expanded pair listings and
+    * cluster ids (= min member id) equal those of an ungrouped frame.
+    */
+  private def docFps(s: SparkSession, dir: String): Dataset[FingerprintRow] = {
+    import s.implicits._
+    sharedFrame(s, dir, "fps")(Materialize(Fingerprints.compute(
+      docsAsImages(s, dir, col("source")), docCfg, groupCol = Some("source")).toDF()))
+      .as[FingerprintRow]
+  }
+
+  private def tieredFrame(s: SparkSession, dir: String): DataFrame = {
+    // looked up outside the build: a shared setup must not touch the
+    // registry from inside another's computeIfAbsent
+    val fps = docFps(s, dir)
     sharedFrame(s, dir, "tiered") {
-      import s.implicits._
-      // lineage cut: the fingerprint stage is referenced by both tiers'
-      // generators (plan-explosion gotcha)
-      val fpsC = Materialize(Fingerprints.compute(docsAsImages(s, dir), docCfg).toDF())
-      try {
-        val fps = fpsC.df.as[FingerprintRow]
-        Clustering.tieredClusters(fpsC.df.select("image_id"), Seq(
-          "high" -> Candidates.simhashPairs(fps, docCfg, sigmaTierHigh),
-          "normal" -> Candidates.simhashPairs(
-            fps, docCfg.copy(nBlocks = 8), sigmaTierNormal)))
-      } finally fpsC.release()
+      Clustering.tieredClusters(fps.toDF().select("image_id"), Seq(
+        "high" -> Candidates.simhashPairs(fps, docCfg, sigmaTierHigh),
+        "normal" -> Candidates.simhashPairs(
+          fps, docCfg.copy(nBlocks = 8), sigmaTierNormal)))
     }
+  }
 
   private def auditedRun(s: SparkSession, dir: String)
       : (DedupPipeline.Result, graft.pipeline.Audit) =
@@ -236,7 +246,7 @@ object Queries {
 
     // --- dedup: SimHash (murmur-based; rows-only vs DuckDB, oracle-tested) ---
     "dedup_simhash" -> ((s, dir) => {
-      Fingerprints.compute(docsAsImages(s, dir), docCfg).toDF()
+      docFps(s, dir).toDF()
         .select(col("image_id").cast("long").as("doc_id"), col("simhash"), col("span"))
         .orderBy("doc_id")
     }),
@@ -244,14 +254,12 @@ object Queries {
       // expandPairs: the query-facing surface is the FULL verified pair
       // listing (reference all-pairs semantics), not the closure-equivalent
       // collapsed edge set the pipeline clusters on
-      val fps = Fingerprints.compute(docsAsImages(s, dir), docCfg)
-      Candidates.simhashPairs(fps, docCfg, docCfg.sigmaHigh, expandPairs = true)
+      Candidates.simhashPairs(docFps(s, dir), docCfg, docCfg.sigmaHigh, expandPairs = true)
         .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
         .orderBy("a", "b")
     }),
     "dedup_minhash_lsh" -> ((s, dir) => {
-      val fps = Fingerprints.compute(docsAsImages(s, dir), docCfg)
-      Candidates.bandPairs(fps, docCfg, expandPairs = true, minhashDerived = true)
+      Candidates.bandPairs(docFps(s, dir), docCfg, expandPairs = true)
         .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
         .orderBy("a", "b")
     }),
@@ -277,12 +285,7 @@ object Queries {
     }),
     "dedup_simhash_pairs_diffgroup" -> ((s, dir) => {
       // F6 compare mode: only cross-source pairs (reference -onlydiffF)
-      val fps = Fingerprints.compute(
-        documents(s, dir).select(
-          col("doc_id").cast("string").as("image_id"),
-          col("text").as("caption"), lit(0L).as("phash"), col("source")),
-        docCfg, groupCol = Some("source"))
-      Candidates.simhashPairs(fps, docCfg, docCfg.sigmaHigh, onlyDiffGroup = true)
+      Candidates.simhashPairs(docFps(s, dir), docCfg, docCfg.sigmaHigh, onlyDiffGroup = true)
         .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
         .orderBy("a", "b")
     }),

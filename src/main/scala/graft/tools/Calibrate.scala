@@ -45,9 +45,8 @@ object Calibrate {
 
     println(f"${"k"}%2s ${"capw"}%4s ${"sig"}%3s ${"tau"}%4s | near_cap  near_img | false_pair_rate")
     configs.foreach { cfg =>
-      val perms = MinHashCore.permutations(cfg.minhashK, cfg.seed)
       def fp(it: Item) =
-        Fingerprints.fingerprintOf(s"${it.fam}_${it.variant}", it.cap, it.phash, "", cfg, perms)
+        Fingerprints.fingerprintOf(s"${it.fam}_${it.variant}", it.cap, it.phash, "", cfg)
       val byFam = items.groupBy(_.fam)
       var capHit = 0; var capTot = 0; var imgHit = 0; var imgTot = 0
       byFam.values.foreach { fam =>

@@ -2,25 +2,26 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.GraftConfig
+import graft.core.{GraftConfig, MinHashCore}
 import graft.model.FingerprintRow
 import graft.pipeline.Candidates
 
 /** Randomized exactness characterization of the bucket joins (round-3
-  * VERDICT #7): the block/band keys were chosen to be collision-free (real
-  * column values, lane arrays — never a folded 64-bit key), so the
-  * candidate sets must EQUAL their mathematical definition on random
-  * corpora — no pair missing (bucket key built from the wrong bits) and no
-  * pair manufactured (key collision) — and the salted hot-bucket rewrite
-  * must produce the identical, exactly-once pair set. Deterministic seeds;
-  * 20 corpora per property.
+  * VERDICT #7): the candidate sets must EQUAL their mathematical definition
+  * on random corpora — no pair missing (bucket key built from the wrong
+  * bits) and no pair manufactured — and the salted hot-bucket rewrite must
+  * produce the identical, exactly-once pair set. Block keys are the real
+  * block values. Band keys are `MinHashCore.bandHashes` folds of a band's
+  * lanes: a fold collision (p ~ 2^-64) could only add a candidate, which
+  * the exact verify rejects, so at these sizes the candidate set is the
+  * definition's. Deterministic seeds; 8 corpora per property.
   *
   * The characterizations use thresholds that pass every candidate
   * (sigma = 64 / tau = 0), so the output IS the candidate set:
   *  - simhash path: pair present ⟺ fingerprints share ≥ 1 identical
   *    pigeonhole block (the Manku-style candidate definition);
-  *  - band path: pair present ⟺ signatures agree on ALL lanes of ≥ 1 band
-  *    (the Broder banding definition).
+  *  - band path: pair present ⟺ the signatures of the two gram sets agree
+  *    on ALL lanes of ≥ 1 band (the Broder banding definition).
   */
 class BucketExactnessSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -40,19 +41,25 @@ class BucketExactnessSpec extends AnyFunSuite {
       pools(b)(rnd.nextInt(pools(b).length)) << (b * 16)
     }.reduce(_ | _)
 
+  /** Each row's grams are 1-3 draws from a 6-value pool (sorted-distinct,
+    * like the fingerprint stage's), so overlapping sets share bands and
+    * identical sets engage the band pass's collapse.
+    */
   private def rows(rnd: scala.util.Random): Seq[FingerprintRow] = {
     val pools = Array.fill(4)(Array.fill(6)(rnd.nextLong() & 0xffffL))
-    val lanePool = Array.fill(5)(rnd.nextLong())
+    val gramPool = Array.fill(6)(rnd.nextLong())
     (0 until nRows).map { i =>
       FingerprintRow(
         image_id = f"r$i%03d",
         simhash = mkSim(rnd, pools),
-        minhash = Array.fill(8)(lanePool(rnd.nextInt(lanePool.length))),
-        grams = Array(i * 2L, i * 2L + 1), // unique per row: no collapse, J=0
+        grams = Array.fill(1 + rnd.nextInt(3))(gramPool(rnd.nextInt(gramPool.length)))
+          .distinct.sorted,
         span = 100,
         group = "")
     }
   }
+
+  private val perms = MinHashCore.permutations(cfg(0).minhashK, cfg(0).seed)
 
   private def sharedBlock(a: Long, b: Long): Boolean =
     (0 until 4).exists(i => ((a >>> (i * 16)) & 0xffffL) == ((b >>> (i * 16)) & 0xffffL))
@@ -90,51 +97,22 @@ class BucketExactnessSpec extends AnyFunSuite {
     }
   }
 
-  test("derived-minhash band path == shuffled-minhash path on real fingerprints") {
-    // round-6: the pipeline passes minhashDerived=true so the 512 B/row
-    // signature column is recomputed per representative instead of shuffled
-    // through the collapse — valid exactly when minhash = signature(grams),
-    // which is true for fingerprint-stage rows by construction. Pin the two
-    // paths identical on REAL fingerprints (captions with planted near-dups
-    // and exact dups so collapse, banding, and verify all engage).
-    val caps = (0 until 40).map {
-      case i if i % 4 == 0 => s"a bright red vintage car parked beside harbor wall number ${i / 8}"
-      case i if i % 4 == 1 => s"a bright red vintage car parked beside harbor wall number ${i / 8} today"
-      case i => s"totally unrelated caption about topic $i with distinct words w$i x$i"
-    }
-    import spark.implicits._
-    val images = caps.zipWithIndex
-      .map { case (c, i) => (f"d$i%03d", c, 0L) }
-      .toDF("image_id", "caption", "phash")
-    val fps = graft.pipeline.Fingerprints.compute(images, GraftConfig())
-      .toDF().localCheckpoint(true).as[FingerprintRow](
-        org.apache.spark.sql.Encoders.product[FingerprintRow])
-    val derivedRows = collectPairs(
-      Candidates.bandPairs(fps, GraftConfig(), expandPairs = true, minhashDerived = true))
-    val shuffledRows = collectPairs(
-      Candidates.bandPairs(fps, GraftConfig(), expandPairs = true))
-    // the exact dups engage the collapse, so these pin the star expansion
-    // itself: no duplicate and no self-pair
-    Seq(derivedRows, shuffledRows).foreach { rows =>
-      assert(rows.distinct.length === rows.length, "duplicate pairs emitted")
-      assert(rows.forall { case (a, b) => a < b }, "pair not ordered a < b")
-    }
-    val derived = derivedRows.toSet
-    assert(derived === shuffledRows.toSet)
-    assert(derived.nonEmpty, "fixture must produce band pairs or the test is vacuous")
-  }
-
   test("minhash band candidates = definition, salted == unsalted, exactly once") {
     (1 to nTrials).foreach { trial =>
       val rnd = new scala.util.Random(2000 + trial)
       val rs = rows(rnd)
-      val want = expected(rs, (a, b) => sharedBand(a.minhash, b.minhash))
+      assert(rs.map(_.grams.toSeq).distinct.length < rs.length,
+        s"trial $trial: no identical gram sets, the collapse is not exercised")
+      val sig = rs.map(r => r.image_id -> MinHashCore.signature(r.grams, perms)).toMap
+      val want = expected(rs, (a, b) => sharedBand(sig(a.image_id), sig(b.image_id)))
+      assert(want.nonEmpty, s"trial $trial: no band pairs, the test is vacuous")
       import spark.implicits._
       val ds = rs.toDS()
       Seq(1000000, 2).foreach { cap =>
         val got = collectPairs(Candidates.bandPairs(ds, cfg(cap), expandPairs = true))
         assert(got.distinct.length === got.length,
           s"trial $trial cap=$cap: duplicate pairs emitted")
+        assert(got.forall { case (a, b) => a < b }, s"trial $trial cap=$cap: pair not a < b")
         assert(got.toSet === want, s"trial $trial cap=$cap: band candidate set diverges")
       }
     }

@@ -1,5 +1,6 @@
 package graft
 
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 
@@ -127,6 +128,22 @@ class MinHashCoreSpec extends AnyFunSuite {
     // and a J=1 pair agrees everywhere
     val c = MinHashCore.signature(hashes(Seq("q", "p", "y", "x")), perms)
     assert(a.sameElements(c))
+  }
+
+  test("range signature over an array == Iterable signature (empty, dups, unsorted)") {
+    val perms = MinHashCore.permutations(16, 3L)
+    // a small value pool makes duplicates common; listOf covers empty
+    val tokens = Gen.listOf(Gen.oneOf(Gen.choose(Long.MinValue, Long.MaxValue),
+      Gen.oneOf(0L, 1L, -1L, 42L)))
+    val prop = Prop.forAll(tokens, Gen.choose(0, 5), Gen.choose(0, 5)) {
+      (ts: List[Long], pre: Int, post: Int) =>
+        // the range sits inside a padded array, so from/until are honoured
+        val arr = Array.fill(pre)(7L) ++ ts ++ Array.fill(post)(9L)
+        MinHashCore.signature(arr, pre, pre + ts.length, perms)
+          .sameElements(MinHashCore.signature(ts, perms))
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("band hashes collide iff every lane in the band matches") {

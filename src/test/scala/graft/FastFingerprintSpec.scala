@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{FingerprintHasher, GraftConfig, MinHashCore}
+import graft.core.{FingerprintHasher, GraftConfig}
 import graft.pipeline.Fingerprints
 
 /** The allocation-free [[FingerprintHasher]] must be BIT-IDENTICAL to the
@@ -38,18 +38,16 @@ class FastFingerprintSpec extends AnyFunSuite {
     Gen.listOfN(60, words).map(_.mkString(" ")))
 
   private def checkParity(cfg: GraftConfig): Unit = {
-    val perms = MinHashCore.permutations(cfg.minhashK, cfg.seed)
-    val hasher = new FingerprintHasher(cfg, perms)
+    val hasher = new FingerprintHasher(cfg)
     check(Prop.forAll(captions, Gen.choose(Long.MinValue, Long.MaxValue)) {
       (cap: String, phash: Long) =>
-        val want = Fingerprints.fingerprintOf("id", cap, phash, "", cfg, perms)
+        val want = Fingerprints.fingerprintOf("id", cap, phash, "", cfg)
         val got = hasher.fingerprint(cap, phash)
         (got.simhash == want.simhash) :| s"simhash cap=$cap" &&
         (got.simhashLo == want.simhash_lo) :| s"simhash_lo cap=$cap" &&
         (got.span == want.span) :| s"span cap=$cap" &&
         (got.norm == graft.core.Shingling.normalize(cap)) :| s"norm cap=$cap" &&
-        (got.grams.toSeq == want.grams.toSeq) :| s"grams cap=$cap" &&
-        (got.minhash.toSeq == want.minhash.toSeq) :| s"minhash cap=$cap"
+        (got.grams.toSeq == want.grams.toSeq) :| s"grams cap=$cap"
     })
   }
 
@@ -69,16 +67,14 @@ class FastFingerprintSpec extends AnyFunSuite {
 
   test("scratch-state reuse: interleaved long/short/empty rows stay exact") {
     val cfg = GraftConfig()
-    val perms = MinHashCore.permutations(cfg.minhashK, cfg.seed)
-    val hasher = new FingerprintHasher(cfg, perms)
+    val hasher = new FingerprintHasher(cfg)
     val caps = Seq(
       ("big " * 200).trim, "", "one", "a b", ("кошка 日本語 " * 50).trim, "tiny")
     caps.zipWithIndex.foreach { case (cap, i) =>
-      val want = Fingerprints.fingerprintOf(s"r$i", cap, i.toLong * 7919, "", cfg, perms)
+      val want = Fingerprints.fingerprintOf(s"r$i", cap, i.toLong * 7919, "", cfg)
       val got = hasher.fingerprint(cap, i.toLong * 7919)
       assert(got.simhash === want.simhash, s"row $i")
       assert(got.grams.toSeq === want.grams.toSeq, s"row $i")
-      assert(got.minhash.toSeq === want.minhash.toSeq, s"row $i")
     }
   }
 }

@@ -27,6 +27,7 @@ class OwnershipSpec extends AnyFunSuite {
 
   /** A `documents` table of 40-word families: two exact copies and a
     * one-word edit each, so both cluster tiers and the gram join have pairs.
+    * Two sources, as the doc fingerprint frame groups by `source`.
     */
   lazy val docsDir: String = {
     import spark.implicits._
@@ -34,8 +35,8 @@ class OwnershipSpec extends AnyFunSuite {
     val docs = (0 until 40).flatMap { _ =>
       val base = Vector.fill(40)(s"w${rnd.nextInt(300)}")
       Seq(base, base, base.updated(rnd.nextInt(40), "edit"))
-    }.zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
-    docs.toDF("doc_id", "text").write.parquet(s"$tmp/docs/documents.parquet")
+    }.zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" "), s"s${i % 2}") }
+    docs.toDF("doc_id", "text", "source").write.parquet(s"$tmp/docs/documents.parquet")
     s"$tmp/docs"
   }
 
@@ -62,7 +63,9 @@ class OwnershipSpec extends AnyFunSuite {
 
   test("each shared setup's blocks back the frame it caches") {
     Queries.freeSharedCaches()
-    try for (q <- Seq("dedup_clusters_tiered", "dedup_ngram_jaccard", "dedup_clusters")) {
+    // dedup_simhash first: it caches the doc fingerprints the tiered setup reads
+    try for (q <- Seq("dedup_simhash", "dedup_clusters_tiered", "dedup_ngram_jaccard",
+                      "dedup_clusters")) {
       val before = persisted()
       val frame = Queries.queries(q)(spark, docsDir)
       assert(frame.count() > 0)

@@ -28,11 +28,12 @@ class ValueParitySpec extends AnyFunSuite {
   case class Fp(id: Long, sim: Long, span: Int, grams: Array[Long],
                 sig: Array[Long], group: String)
 
-  // same pure per-row function the Spark stage maps — group = "" like
-  // docsAsImages (the diffgroup test recomputes with group = source)
+  // same pure per-row function the Spark stage maps — group = "" (the
+  // group only narrows the collapse; the diffgroup test recomputes with
+  // group = source)
   def fpOf(id: Long, text: String, group: String): Fp = {
-    val row = Fingerprints.fingerprintOf(id.toString, text, 0L, group, cfg, perms)
-    Fp(id, row.simhash, row.span, row.grams, row.minhash, group)
+    val row = Fingerprints.fingerprintOf(id.toString, text, 0L, group, cfg)
+    Fp(id, row.simhash, row.span, row.grams, MinHashCore.signature(row.grams, perms), group)
   }
   lazy val fps: Array[Fp] =
     docs.map { case (id, t, _) => fpOf(id, t, "") }.filter(_.span > cfg.minSpan)
