@@ -3,13 +3,14 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
-import graft.core.{GraftConfig, MinHashCore, SimHashCore}
+import graft.core.{GraftConfig, MinHashCore}
 import graft.model.FingerprintRow
 
 /** Candidate generation + verification (SURVEY.md §2.4 J2-J4, §2.7).
   *
-  * Replaces the reference's O(n²) nested loop
-  * (/root/reference/SimHasher.cpp:149-192) with bucketed self-joins:
+  * Replaces the reference's O(n²) nested loop (CloneBAS
+  * `SimHasher.cpp:149-192`) with ONE bucketed self-join that both
+  * generators feed:
   *
   *  - SimHash pigeonhole bit-block buckets (Manku et al., WWW'07): split the
   *    64-bit fingerprint into nBlocks ranges; any pair at Hamming <=
@@ -22,52 +23,52 @@ import graft.model.FingerprintRow
   *
   *  - MinHash band buckets (Broder '97 / LSH banding): equi-join on
   *    (bandIdx, bandHash), verified by exact Jaccard >= tau on the distinct
-  *    gram-hash arrays with built-in `array_intersect`/`array_union`.
+  *    gram-hash arrays.
   *
-  * Skew (north_rule "explicit salting of hot LSH buckets"): bucket keys are
-  * counted first; rows in buckets hotter than `hotBucketCap` get a salt
-  * `pmod(xxhash64(id), s)` and the pair grid (i, j) is enumerated so every
-  * cross-salt pair is still produced exactly once — exactness is preserved,
-  * but no single task sees the whole mega-bucket. AQE skew-join handles the
-  * residual imbalance.
+  * Each generator emits key-only rows of its collapse representatives;
+  * [[verifiedPairs]] joins them all in one salted [[bucketSelfJoin]] and
+  * verifies by payload join-back. `simhashPairs`/`bandPairs` pass one
+  * generator, [[allCandidates]] both.
+  * Skew: buckets hotter than `hotBucketCap` are salted, exactly
+  * ([[bucketSelfJoin]]); AQE skew-join handles the residual imbalance.
   */
 object Candidates {
 
-  /** (blockIdx, blockVal, id, simhash[, simhash_lo], span, group) exploded
-    * view. 64-bit mode: block i covers simhash bits [i*64/n, (i+1)*64/n).
-    * 128-bit mode (cfg.bits == 128, nBlocks even): the first n/2 blocks
-    * split the HI word, the last n/2 the LO word — a disjoint partition of
-    * all 128 bits, so the pigeonhole guarantee (Hamming <= nBlocks-1 ⇒ one
-    * whole block identical) holds over the full 128-bit distance. Pure
-    * column math, codegen'd.
-    */
-  private def blockView(fps: DataFrame, cfg: GraftConfig): DataFrame = {
-    def wordBlocks(word: Column, n: Int, idxOffset: Int): Seq[Column] =
-      (0 until n).map { i =>
-        val lo = (i * 64) / n
-        val hi = ((i + 1) * 64) / n
-        val width = hi - lo
-        val mask = if (width == 64) -1L else (1L << width) - 1L
-        struct(lit(idxOffset + i).as("blockIdx"),
-          (shiftrightunsigned(word, lo).bitwiseAND(lit(mask))).as("blockVal"))
-      }
-    val blocks =
-      if (cfg.bits == 128)
-        wordBlocks(col("simhash"), cfg.nBlocks / 2, 0) ++
-          wordBlocks(col("simhash_lo"), cfg.nBlocks / 2, cfg.nBlocks / 2)
-      else wordBlocks(col("simhash"), cfg.nBlocks, 0)
-    fps.select(col("image_id"), col("simhash"), col("simhash_lo"), col("span"),
-        col("group"), explode(array(blocks: _*)).as("b"))
-      .select(col("image_id"), col("simhash"), col("simhash_lo"), col("span"),
-        col("group"), col("b.blockIdx"), col("b.blockVal"))
-  }
+  /** Salts per hot bucket in [[bucketSelfJoin]]. */
+  private val NSalts = 8
 
-  /** Codegen'd Hamming distance of an l_/r_ pair at the config's width. */
-  private def hammingCol(cfg: GraftConfig): Column = {
-    val hi = bit_count(col("l_simhash").bitwiseXOR(col("r_simhash")))
-    if (cfg.bits == 128)
-      hi + bit_count(col("l_simhash_lo").bitwiseXOR(col("r_simhash_lo")))
-    else hi
+  /** One candidate generator over its collapse representatives.
+    *
+    * @param source the `source` tag of its pairs in [[allCandidates]]
+    * @param keys   key-only bucket rows (image_id, idx, key)
+    * @param reps   representative rows: `image_id` + the payload `verify` reads
+    * @param verify exact predicate over a candidate's l_/r_-prefixed payload
+    * @param star   (a=rep, b=member) identity edges; None when not collapsed
+    */
+  private case class Generator(source: String, keys: DataFrame, reps: DataFrame,
+                               verify: Column, star: Option[DataFrame])
+
+  /** The simhash words at the config's width (LO only in 128-bit mode). */
+  private def words(cfg: GraftConfig): Seq[String] =
+    Seq("simhash", "simhash_lo").take(cfg.bits / 64)
+
+  /** Pigeonhole block key rows (image_id, idx, key) of the representatives:
+    * each word splits into nBlocks / |words| bit ranges, block i covering
+    * bits [i*64/n, (i+1)*64/n) of its word — a disjoint partition of all
+    * 64 or 128 bits, so the pigeonhole guarantee (Hamming <= nBlocks-1 ⇒
+    * one whole block identical) holds over the full distance. Pure column
+    * math, codegen'd.
+    */
+  private def blockView(reps: DataFrame, cfg: GraftConfig): DataFrame = {
+    val n = cfg.nBlocks / words(cfg).length
+    val blocks = for ((w, wi) <- words(cfg).zipWithIndex; i <- 0 until n) yield {
+      val lo = (i * 64) / n
+      val width = ((i + 1) * 64) / n - lo
+      val mask = if (width == 64) -1L else (1L << width) - 1L
+      struct(lit(wi * n + i).as("idx"),
+        shiftrightunsigned(col(w), lo).bitwiseAND(lit(mask)).as("key"))
+    }
+    reps.select(col("image_id"), inline(array(blocks: _*)))
   }
 
   /** Generic exact salted self-join on a bucket-keyed view.
@@ -88,8 +89,7 @@ object Candidates {
     * @param cap     rows-per-bucket threshold above which salting applies
     * @return        pairs with all payload columns prefixed l_/r_
     */
-  def bucketSelfJoin(keyed: DataFrame, keyCols: Seq[String], cap: Int,
-                     nSalts: Int = 8): DataFrame = {
+  def bucketSelfJoin(keyed: DataFrame, keyCols: Seq[String], cap: Int): DataFrame = {
     val key = keyCols.map(col)
     // Hot-key detection on a fixed-fraction SAMPLE: hotness only decides
     // whether the salting rewrite applies (a performance knob — candidate
@@ -105,25 +105,19 @@ object Candidates {
       .select((key :+ lit(true).as("is_hot")): _*)
     val tagged = keyed.join(broadcast(hotKeys), keyCols, "left")
 
-    def prefixed(d: DataFrame, p: String): DataFrame =
-      d.columns.foldLeft(d)((acc, c) => acc.withColumnRenamed(c, p + c))
-
+    def prefixed(d: DataFrame, p: String) = d.select(d.columns.map(c => col(c).as(p + c)).toSeq: _*)
     def pairs(l: DataFrame, r: DataFrame, extraKeys: Seq[String]): DataFrame = {
-      val lp = prefixed(l, "l_")
-      val rp = prefixed(r, "r_")
       val cond = (keyCols ++ extraKeys)
         .map(c => col("l_" + c) === col("r_" + c)).reduce(_ && _)
-      lp.join(rp, cond && col("l_image_id") < col("r_image_id"))
+      prefixed(l, "l_").join(prefixed(r, "r_"), cond && col("l_image_id") < col("r_image_id"))
+        .drop(extraKeys.flatMap(c => Seq("l_" + c, "r_" + c)): _*)
     }
 
     val cold = tagged.filter(col("is_hot").isNull).drop("is_hot")
     val hot = tagged.filter(col("is_hot").isNotNull).drop("is_hot")
-    val hotL = hot.withColumn("salt", pmod(xxhash64(col("image_id")), lit(nSalts)).cast("int"))
-    val hotR = hot.withColumn("salt", explode(array((0 until nSalts).map(lit): _*)))
-
-    val dropCols = (d: DataFrame) => d.drop("l_salt", "r_salt")
-    dropCols(pairs(cold, cold, Nil))
-      .unionByName(dropCols(pairs(hotL, hotR, Seq("salt"))))
+    val hotL = hot.withColumn("salt", pmod(xxhash64(col("image_id")), lit(NSalts)).cast("int"))
+    val hotR = hot.withColumn("salt", explode(array((0 until NSalts).map(lit): _*)))
+    pairs(cold, cold, Nil).unionByName(pairs(hotL, hotR, Seq("salt")))
   }
 
   /** Exact-identity collapse before a pair join: rows whose `keyCol` value
@@ -185,7 +179,7 @@ object Candidates {
     * representative (identical key ⇒ identical verify outcome), and every
     * within-group pair is itself verified (Hamming 0 / Jaccard 1) — exactly
     * the pairs the reference's all-pairs loop would produce
-    * (/root/reference/SimHasher.cpp:149-192). QUADRATIC in identity-group
+    * (CloneBAS `SimHasher.cpp:149-192`). QUADRATIC in identity-group
     * size BY DEFINITION (the listing itself is the quadratic object) — this
     * is the query-facing surface; the pipeline clusters on the collapsed
     * star+rep edge set, which is component-equivalent and linear.
@@ -219,68 +213,123 @@ object Candidates {
         greatest(col("x"), col("y")).as("b") +: extras): _*)
   }
 
-  /** SimHash bit-block candidate pairs, verified to Hamming <= sigma with
-    * the span prefilter and optional same/diff-group modes
-    * (/root/reference/SimHasher.cpp:91-122) in the join output filter.
+  /** The candidate core: the generators' key rows, tagged with their index
+    * `gen`, run through ONE [[bucketSelfJoin]] on (gen, idx, key) and one
+    * dedup on (gen, a, b). Each candidate joins its generator's payload back
+    * by id — a wide payload crosses the wire once per candidate, not once
+    * per key row — and is kept iff that generator's predicate holds.
     *
-    * Pair-list contract: with `expandPairs = false` (pipeline default) the
-    * output is star edges + representative pairs — complete only UP TO
+    * @return verified representative pairs (a, b, source), a < b
+    */
+  private def verifiedPairs(gens: Seq[Generator], cap: Int): DataFrame = {
+    def tagged(rows: Generator => DataFrame): DataFrame = gens.zipWithIndex
+      .map { case (g, i) => rows(g).withColumn("gen", lit(i)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val cand = bucketSelfJoin(tagged(_.keys), Seq("gen", "idx", "key"), cap)
+      .select(col("l_gen").as("gen"), col("l_image_id").as("a"), col("r_image_id").as("b"))
+      .dropDuplicates("gen", "a", "b")
+    val payload = tagged(_.reps)
+    def side(id: String, prefix: String): DataFrame = payload.select(payload.columns.map {
+      case "gen" => col("gen")
+      case "image_id" => col("image_id").as(id)
+      case c => col(c).as(prefix + c)
+    }.toSeq: _*)
+    val keep = gens.zipWithIndex
+      .map { case (g, i) => col("gen") === i && g.verify }.reduce(_ || _)
+    cand.join(side("a", "l_"), Seq("gen", "a"))
+      .join(side("b", "r_"), Seq("gen", "b"))
+      .filter(keep)
+      .select(col("a"), col("b"),
+        element_at(typedLit(gens.map(_.source)), col("gen") + 1).as("source"))
+  }
+
+  /** The SimHash generator: bit-block keys, verified to Hamming <= sigma
+    * with the span prefilter and the optional diff-group mode
+    * (CloneBAS `SimHasher.cpp:91-122`). None for sigma < 0 (sigma_normal =
+    * -1 matches nothing, dif_config.txt:3).
+    */
+  private def simhashGen(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int,
+                         onlyDiffGroup: Boolean): Option[Generator] =
+    if (sigma < 0) None
+    else {
+      // collapse rows with identical (simhash, span, group) — d=0 and
+      // span-compatible by construction — unless the diff-group mode needs
+      // per-row group checks. Projected first: the collapse shuffles every
+      // row, at ~50 B instead of the full row's gram array and caption.
+      val narrow = fps.toDF().select(
+        col("image_id"), col("simhash"), col("simhash_lo"), col("span"), col("group"))
+      val (reps, star) =
+        if (onlyDiffGroup) (narrow, None)
+        else collapseExact(narrow, Seq("simhash", "simhash_lo", "span", "group")) match {
+          case (r, s) => (r, Some(s))
+        }
+      val hamming = words(cfg).map(w => bit_count(col("l_" + w).bitwiseXOR(col("r_" + w))))
+      val spanOk =
+        abs(col("l_span") - col("r_span")) <= least(col("l_span"), col("r_span")) * cfg.spanRatio
+      val groupOk = if (onlyDiffGroup) col("l_group") =!= col("r_group") else lit(true)
+      Some(Generator("simhash", blockView(reps, cfg), reps,
+        hamming.reduce(_ + _) <= lit(sigma) && spanOk && groupOk, star))
+    }
+
+  /** The MinHash band generator, verified by exact Jaccard >= tau. */
+  private def bandGen(fps: Dataset[FingerprintRow], cfg: GraftConfig): Generator = {
+    // collapse identical gram sets (Jaccard 1 by construction) to one
+    // representative each — a mega-group of equal captions costs O(|group|).
+    // Projected to the columns this pass reads (id, grams for key+verify)
+    // before the all-rows collapse shuffle.
+    val (reps, star) = collapseExact(
+      fps.toDF().select(col("image_id"), col("grams")), Seq("grams"))
+    // The signature is computed here, once per REPRESENTATIVE, and never
+    // stored. Band key = MinHashCore.bandHashes' folded 64-bit hash (band
+    // index mixed in), not the lane array: a bigint key shuffles ~40% fewer
+    // bytes and compares ~3x faster (the band join was the pipeline's
+    // largest exchange, 910 MB at 257k images). A fold collision
+    // (p ~ 2^-64) can only ADD a candidate, which the exact verify rejects.
+    val (k, seed, rpb) = (cfg.minhashK, cfg.seed, cfg.rowsPerBand)
+    val spark0 = fps.sparkSession
+    import spark0.implicits._
+    val keys = reps.as[(String, Array[Long])]
+      .mapPartitions { iter =>
+        val perms = MinHashCore.permutations(k, seed)
+        iter.map { case (id, grams) =>
+          (id, MinHashCore.bandHashes(MinHashCore.signature(grams, 0, grams.length, perms), rpb))
+        }
+      }
+      .toDF("image_id", "bandhashes")
+      .select(col("image_id"), posexplode(col("bandhashes")).as(Seq("idx", "key")))
+    // |∩| by the codegen'd sorted merge (grams are stored sorted-distinct):
+    // size(array_intersect(..)) allocates an OpenHashSet PER ROW, which JFR
+    // measured at ~8% of pipeline samples (BENCH.md §hardware).
+    val inter = graft.functions.GraftExpressions.sortedIntersectCount(
+      spark0, col("l_grams"), col("r_grams"))
+    val uni = size(col("l_grams")) + size(col("r_grams")) - inter
+    Generator("minhash_band", keys, reps, uni > 0 && inter >= uni * cfg.jaccardTau, Some(star))
+  }
+
+  /** One generator's pair list. With `expandPairs = false` (pipeline
+    * default) it is star edges + representative pairs — complete only UP TO
     * connected-component closure (members of an identity group don't repeat
     * their representative's neighbor pairs). With `expandPairs = true` the
     * full verified pair listing is returned (reference all-pairs semantics;
     * see [[expandThroughStar]]).
     */
-  def simhashPairs(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int,
-                   onlyDiffGroup: Boolean = false, onlySameGroup: Boolean = false,
-                   expandPairs: Boolean = false): DataFrame = {
-    if (sigma < 0) { // sigma_normal = -1 matches nothing (dif_config.txt:3)
-      Materialize.empty(fps.sparkSession, "a" -> StringType, "b" -> StringType)
-    } else {
-      // collapse rows with identical (simhash, span, group) — d=0 and
-      // span-compatible by construction — unless a group compare mode needs
-      // per-row group checks. Project to the five columns this pass reads
-      // BEFORE the collapse: the groupBy+join-back shuffles every row, and
-      // the full fingerprint row carries the gram array and caption_norm
-      // (a few hundred bytes) vs ~50 B for the simhash columns — the
-      // heaviest all-rows exchange of the pipeline stays narrow.
-      val groupMode = onlyDiffGroup || onlySameGroup
-      val narrow = fps.toDF().select(
-        col("image_id"), col("simhash"), col("simhash_lo"), col("span"), col("group"))
-      val (base, star) =
-        if (groupMode) (narrow, None)
-        else {
-          val (r, s) = collapseExact(narrow,
-            Seq("simhash", "simhash_lo", "span", "group"))
-          (r, Some(s))
-        }
-      val keyed = blockView(base, cfg)
-      val raw = bucketSelfJoin(keyed, Seq("blockIdx", "blockVal"), cfg.hotBucketCap)
-      val groupCond: Column =
-        if (onlyDiffGroup) col("l_group") =!= col("r_group")
-        else if (onlySameGroup) col("l_group") === col("r_group")
-        else lit(true)
-      val joined = raw
-        .filter(
-          hammingCol(cfg) <= lit(sigma) &&
-          abs(col("l_span") - col("r_span")) <= least(col("l_span"), col("r_span")) * cfg.spanRatio &&
-          groupCond)
-        .select(col("l_image_id").as("a"), col("r_image_id").as("b"))
-        .dropDuplicates("a", "b") // same pair can match in several blocks
-      star match {
-        case None => joined
-        case Some(s) if expandPairs => expandThroughStar(joined, s, base)
-        case Some(s) => joined.unionByName(s)
-      }
+  private def pairs(g: Generator, cfg: GraftConfig, expandPairs: Boolean): DataFrame = {
+    val verified = verifiedPairs(Seq(g), cfg.hotBucketCap).select("a", "b")
+    g.star match {
+      case None => verified
+      case Some(s) if expandPairs => expandThroughStar(verified, s, g.reps)
+      case Some(s) => verified.unionByName(s)
     }
   }
 
-  /** MinHash band candidate pairs, verified by exact Jaccard >= tau.
-    *
-    * Candidate generation is KEY-ONLY: the bucket self-join shuffles just
-    * (image_id, bandIdx, bandKey) rows — the gram arrays (the heavy
-    * payload) are joined back onto the deduplicated pair list afterwards,
-    * so at 10^12 scale the wide data crosses the wire once per verified
-    * candidate instead of once per band replica.
+  /** SimHash bit-block pairs at Hamming <= sigma; see [[pairs]]. */
+  def simhashPairs(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int,
+                   onlyDiffGroup: Boolean = false, expandPairs: Boolean = false): DataFrame =
+    simhashGen(fps, cfg, sigma, onlyDiffGroup)
+      .map(pairs(_, cfg, expandPairs))
+      .getOrElse(Materialize.empty(fps.sparkSession, "a" -> StringType, "b" -> StringType))
+
+  /** MinHash band pairs at exact Jaccard >= tau; see [[pairs]].
     *
     * @param minhashDerived kept only for source compatibility with
     *   `perfbench/src/perfbench/Layers.scala`; must be true.
@@ -289,69 +338,18 @@ object Candidates {
                 expandPairs: Boolean = false,
                 minhashDerived: Boolean = true): DataFrame = {
     require(minhashDerived, "the band pass always derives signatures from grams")
-    // collapse identical gram sets (Jaccard 1 by construction) to one
-    // representative each — a mega-group of equal captions costs O(|group|).
-    // Projected to the columns this pass reads (id, grams for key+verify)
-    // before the all-rows collapse shuffle.
-    val (reps, star) = collapseExact(
-      fps.toDF().select(col("image_id"), col("grams")), Seq("grams"))
-    // The signature is a pure, order-insensitive min-fold of the gram set,
-    // so it is computed here, once per REPRESENTATIVE, and never stored or
-    // shuffled. Band key = the shared core's folded 64-bit band hash
-    // (MinHashCore.bandHashes — band index mixed into the fold), not the
-    // raw lane array: the exploded key rows are the self-join's shuffle
-    // payload (nBands rows per rep), and a bigint key shuffles ~40% fewer
-    // bytes and sort-merge-compares ~3x faster than an array<bigint>
-    // (measured: the band join was the pipeline's largest exchange, 910 MB
-    // written at 257k images). A fold collision (p ~ 2^-64 per bucket
-    // pair) can only ADD a candidate, which the exact-Jaccard verify
-    // rejects — the verified output is identical to lane-array banding.
-    val rpb = cfg.rowsPerBand
-    val minhashK = cfg.minhashK
-    val seed = cfg.seed
-    val spark0 = fps.sparkSession
-    import spark0.implicits._
-    val bandRows = reps.select(col("image_id"), col("grams"))
-      .as[(String, Array[Long])]
-      .mapPartitions { iter =>
-        val perms = MinHashCore.permutations(minhashK, seed)
-        iter.map { case (id, grams) =>
-          (id, MinHashCore.bandHashes(
-            MinHashCore.signature(grams, 0, grams.length, perms), rpb))
-        }
-      }
-    val keyed = bandRows
-      .toDF("image_id", "bandhashes")
-      .select(col("image_id"),
-        posexplode(col("bandhashes")).as(Seq("bandIdx", "bandKey")))
-    val cand = bucketSelfJoin(keyed, Seq("bandIdx", "bandKey"), cfg.hotBucketCap)
-      .select(col("l_image_id").as("a"), col("r_image_id").as("b"))
-      .dropDuplicates("a", "b") // same pair may collide in several bands
-    val grams = reps.select(col("image_id"), col("grams"))
-    // |∩| via the codegen'd sorted-merge expression (grams are stored
-    // sorted-distinct by both fingerprint paths): equal to
-    // size(array_intersect(..)) by definition, but zero-allocation — the
-    // built-in allocates an OpenHashSet PER ROW, which JFR measured at ~8%
-    // of pipeline samples and which feeds the multi-thread allocation
-    // contention (BENCH.md §hardware).
-    val verified = cand
-      .join(grams.select(col("image_id").as("a"), col("grams").as("a_grams")), "a")
-      .join(grams.select(col("image_id").as("b"), col("grams").as("b_grams")), "b")
-      .withColumn("inter", graft.functions.GraftExpressions.sortedIntersectCount(
-        fps.sparkSession, col("a_grams"), col("b_grams")))
-      .withColumn("uni", size(col("a_grams")) + size(col("b_grams")) - col("inter"))
-      .filter(col("uni") > 0 && col("inter") >= col("uni") * cfg.jaccardTau)
-      .select("a", "b")
-    if (expandPairs) expandThroughStar(verified, star, reps)
-    else verified.unionByName(star)
+    pairs(bandGen(fps, cfg), cfg, expandPairs)
   }
 
-  /** Union of all generators + pair-level dedup (SURVEY.md §2.7). */
+  /** Both generators through ONE candidate core, plus their star edges, with
+    * pair-level dedup across sources (SURVEY.md §2.7): a pair found by both
+    * keeps the smaller `source` tag.
+    */
   def allCandidates(fps: Dataset[FingerprintRow], cfg: GraftConfig): DataFrame = {
-    val sim = simhashPairs(fps, cfg, cfg.sigmaHigh).withColumn("source", lit("simhash"))
-    val band = bandPairs(fps, cfg)
-      .withColumn("source", lit("minhash_band"))
-    sim.unionByName(band)
+    val gens = simhashGen(fps, cfg, cfg.sigmaHigh, onlyDiffGroup = false).toSeq :+
+      bandGen(fps, cfg)
+    gens.flatMap(g => g.star.map(_.withColumn("source", lit(g.source))))
+      .foldLeft(verifiedPairs(gens, cfg.hotBucketCap))(_ unionByName _)
       .groupBy("a", "b").agg(min("source").as("source"))
   }
 }

@@ -53,10 +53,6 @@ object TextOps {
     )
   }
 
-  /** Exploded distinct (doc_id, gram) pairs for word n-grams. */
-  def gramTable(docs: DataFrame, n: Int): DataFrame =
-    docs.select(col("doc_id"), explode(array_distinct(wordNgrams(toks, n))).as("gram"))
-
   /** Exact n-gram Jaccard pairs >= tau (round-6 shape; same output as the
     * round-5 plain gram self-join, proven by the shared DuckDB oracle):
     *

@@ -48,6 +48,7 @@ object ExplainAudit {
     val fps = Fingerprints.compute(imgScan, cfg)
     dump("simhash_pairs", Candidates.simhashPairs(fps, cfg, cfg.sigmaHigh))
     dump("band_pairs", Candidates.bandPairs(fps, cfg))
+    dump("all_candidates", Candidates.allCandidates(fps, cfg))
 
     Seq("q1_agg", "q2_join", "q3_window", "q6_join_dims", "dedup_ngram_jaccard",
       "sim_cosine_topk", "dedup_exact").foreach { q =>

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.SampleExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 import graft.core.{GraftConfig, MinHashCore}
 import graft.model.FingerprintRow
@@ -22,6 +24,9 @@ import graft.pipeline.Candidates
   *    pigeonhole block (the Manku-style candidate definition);
   *  - band path: pair present ⟺ the signatures of the two gram sets agree
   *    on ALL lanes of ≥ 1 band (the Broder banding definition).
+  *
+  * `allCandidates` runs both generators through one bucket join; it must
+  * equal the union of the standalone passes, and sample hot keys once.
   */
 class BucketExactnessSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -116,5 +121,42 @@ class BucketExactnessSpec extends AnyFunSuite {
         assert(got.toSet === want, s"trial $trial cap=$cap: band candidate set diverges")
       }
     }
+  }
+
+  /** 16 four-bit blocks with sigma 15: block sharing and Hamming passes are
+    * common on these corpora, so both sources yield pairs and overlap.
+    */
+  private def fusedCfg(cap: Int) = cfg(cap).copy(nBlocks = 16, sigmaHigh = 15)
+
+  test("allCandidates = standalone simhash ∪ band pairs, deduped by min(source)") {
+    (1 to nTrials).foreach { trial =>
+      val rs = rows(new scala.util.Random(3000 + trial))
+      import spark.implicits._
+      val ds = rs.toDS()
+      Seq(1000000, 2).foreach { cap =>
+        val c = fusedCfg(cap)
+        val sim = collectPairs(Candidates.simhashPairs(ds, c, c.sigmaHigh)).toSet
+        val band = collectPairs(Candidates.bandPairs(ds, c)).toSet
+        assert(sim.nonEmpty && band.nonEmpty && (sim & band).nonEmpty,
+          s"trial $trial cap=$cap: the sources do not overlap, the test is vacuous")
+        val want = (sim.map(_ -> "simhash") ++ band.map(_ -> "minhash_band"))
+          .groupBy(_._1).map { case (p, tagged) => p -> tagged.map(_._2).min }
+        val got = Candidates.allCandidates(ds, c).select("a", "b", "source").collect()
+          .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toSeq
+        assert(got.map(_._1).distinct.length === got.length,
+          s"trial $trial cap=$cap: duplicate pairs emitted")
+        assert(got.toMap === want, s"trial $trial cap=$cap: allCandidates diverges")
+      }
+    }
+  }
+
+  test("allCandidates samples hot keys once: one bucket join for both generators") {
+    import spark.implicits._
+    val df = Candidates.allCandidates(rows(new scala.util.Random(4000)).toDS(), fusedCfg(2))
+    df.collect()
+    // AQE-aware walk: descends into query stages, not into reused exchanges
+    object Plans extends AdaptiveSparkPlanHelper
+    val samples = Plans.collect(df.queryExecution.executedPlan) { case s: SampleExec => s }
+    assert(samples.length === 1, df.queryExecution.executedPlan.toString)
   }
 }

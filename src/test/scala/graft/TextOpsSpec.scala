@@ -15,7 +15,7 @@ class TextOpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  /** Mirror of wordNgrams/gramTable semantics: distinct word 3-grams; docs
+  /** Mirror of the wordNgrams gram-set semantics: distinct word 3-grams; docs
     * with fewer than n words contribute their whole text as one gram
     * (`greatest(1, size - n + 1)` slice semantics).
     */
