@@ -31,8 +31,10 @@ package graft.core
   * @param minhashK       MinHash signature length
   * @param rowsPerBand    LSH band height (bands = minhashK / rowsPerBand)
   * @param jaccardTau     Jaccard verification threshold for band candidates
-  * @param nBlocks        SimHash pigeonhole block count (must be > sigmaHigh
-  *                       for exact candidate completeness)
+  * @param nBlocks        upper bound on the SimHash pigeonhole block count:
+  *                       a pass at Hamming threshold sigma splits into
+  *                       min(nBlocks, sigma + 1) blocks, the fewest that
+  *                       keep it exact (so nBlocks must be > sigmaHigh)
   * @param hotBucketCap   bucket size above which salting kicks in (north_rule
   *                       "explicit salting of hot LSH buckets")
   * @param debugDump      flag-gated debug dump sinks (SURVEY.md §2.1 S5):

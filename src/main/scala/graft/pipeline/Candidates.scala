@@ -13,8 +13,8 @@ import graft.model.FingerprintRow
   * generators feed:
   *
   *  - SimHash pigeonhole bit-block buckets (Manku et al., WWW'07): split the
-  *    64-bit fingerprint into nBlocks ranges; any pair at Hamming <=
-  *    nBlocks-1 shares >= 1 identical block → an equi-join on
+  *    64-bit fingerprint into min(nBlocks, sigma+1) ranges; any pair at
+  *    Hamming <= sigma shares >= 1 identical block → an equi-join on
   *    (blockIdx, blockVal) yields an EXACT candidate superset for the
   *    sigma_high tier, then the reference's own predicates verify:
   *    span prefilter (SimHasher.cpp:96-99) and Hamming <= sigma via
@@ -52,15 +52,18 @@ object Candidates {
   private def words(cfg: GraftConfig): Seq[String] =
     Seq("simhash", "simhash_lo").take(cfg.bits / 64)
 
-  /** Pigeonhole block key rows (image_id, idx, key) of the representatives:
-    * each word splits into nBlocks / |words| bit ranges, block i covering
-    * bits [i*64/n, (i+1)*64/n) of its word — a disjoint partition of all
-    * 64 or 128 bits, so the pigeonhole guarantee (Hamming <= nBlocks-1 ⇒
-    * one whole block identical) holds over the full distance. Pure column
-    * math, codegen'd.
+  /** Pigeonhole block key rows (image_id, idx, key) of the representatives.
+    * The pass needs b = min(nBlocks, sigma + 1) blocks: sigma + 1 already
+    * makes the join exact (Hamming <= sigma ⇒ one whole block identical),
+    * and fewer, wider blocks make a smaller candidate superset. Each word
+    * splits into n = ceil(b / |words|) bit ranges, block i covering bits
+    * [i*64/n, (i+1)*64/n) of its word — a disjoint partition of all 64 or
+    * 128 bits into n * |words| >= b blocks, so the guarantee holds over the
+    * full distance. Pure column math, codegen'd.
     */
-  private def blockView(reps: DataFrame, cfg: GraftConfig): DataFrame = {
-    val n = cfg.nBlocks / words(cfg).length
+  private def blockView(reps: DataFrame, cfg: GraftConfig, sigma: Int): DataFrame = {
+    val b = math.min(cfg.nBlocks, sigma + 1)
+    val n = (b + words(cfg).length - 1) / words(cfg).length
     val blocks = for ((w, wi) <- words(cfg).zipWithIndex; i <- 0 until n) yield {
       val lo = (i * 64) / n
       val width = ((i + 1) * 64) / n - lo
@@ -267,7 +270,7 @@ object Candidates {
       val spanOk =
         abs(col("l_span") - col("r_span")) <= least(col("l_span"), col("r_span")) * cfg.spanRatio
       val groupOk = if (onlyDiffGroup) col("l_group") =!= col("r_group") else lit(true)
-      Some(Generator("simhash", blockView(reps, cfg), reps,
+      Some(Generator("simhash", blockView(reps, cfg, sigma), reps,
         hamming.reduce(_ + _) <= lit(sigma) && spanOk && groupOk, star))
     }
 

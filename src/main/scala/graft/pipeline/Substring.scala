@@ -19,6 +19,19 @@ import graft.core.GraftConfig
   * candidates→verify shape as the LSH passes, with the anchor playing the
   * role of the bucket key.
   *
+  * Caption collapse: the anchor join runs over DISTINCT (caption_norm,
+  * span) values, not rows. Rows with the same caption and span share one
+  * anchor key and the same gram keys, so on rows a group of h identical
+  * captions would cost h² join rows, every one rejected by the strict span
+  * comparison. Collapsing is exact: the verify reads nothing but the two
+  * captions and spans, so a member row inherits its caption's outcome; and
+  * identical captions never form a pair, because `a_span < b_span` is
+  * strict and a caption never contains itself word-aligned (it would need
+  * a space before or after its own full length). Each verified caption pair
+  * then joins back to its member rows once per side — a product of the two
+  * member sets, never a per-caption id array, so a caption shared by any
+  * number of rows stays a join, not one row.
+  *
   * Scale notes: the haystack emits grams at widths 1..k (k ≤ 3), a constant
   * ×k row amplification on top of the single-width design; width is part of
   * the join key so buckets stay as selective as the anchor text itself. A
@@ -59,12 +72,22 @@ object Substring {
     // path spent ~6% of pipeline samples in UTF8String.split/String.split).
     // Width is folded into the key's SEED, collapsing the old
     // (width, gram-string) composite join key into one bigint.
-    val anchors = rows
-      .filter(col("span") > cfg.minSpan)
-      .select(col("image_id").as("a"), col("caption_norm").as("a_text"),
-        col("span").as("a_span"),
-        graft.functions.GraftExpressions
-          .leadingGramKey(spark, col("caption_norm"), k).as("gram_key"))
+    val anchorKey = graft.functions.GraftExpressions.leadingGramKey(spark, col("caption_norm"), k)
+    // One gate for BOTH sides of a pair: b_span > a_span > minSpan, and a
+    // null caption (the only one with a null anchor key) pairs with nothing.
+    // Stated once here, it keeps the anchor, haystack and member frames on
+    // one plan below their exchanges, so each exchange runs once and is
+    // reused; gated on the anchor side alone, the optimizer pushes the
+    // anchor key's null check under that side only, and the collapse
+    // shuffles twice.
+    val gated = rows.filter(col("span") > cfg.minSpan && anchorKey.isNotNull)
+    // One row per distinct caption: `distinct` is a grouping with map-side
+    // partial aggregation, so a hot caption reduces to one row per input
+    // partition before its shuffle (a window over the caption would ship
+    // the whole group to one task; see Candidates.collapseExact).
+    val captions = gated.select(col("caption_norm"), col("span")).distinct()
+    val anchors = captions.select(col("caption_norm").as("a_text"), col("span").as("a_span"),
+      anchorKey.as("gram_key"))
     // haystack: every word w-gram KEY for w = 1..min(k, |words|), exploded
     // from one sorted-distinct long array per caption (WordGramKeyArray).
     // The full text+span ride on every exploded key row ON PURPOSE: the
@@ -75,27 +98,37 @@ object Substring {
     // candidate superset is ~200x larger than the verified output (common
     // leading phrases), and re-shuffling that fat candidate list costs far
     // more than the text amplification on the gram side, which compresses
-    // well (repeated phrases) in the shuffle codec.
+    // well (repeated phrases) in the shuffle codec. Both are now paid per
+    // distinct caption, not per row.
     //
     // Exactness under hash keying: a key collision only ADDS a candidate,
     // and the verify below checks full word-aligned containment — a
     // verify-passing pair has a's leading gram as a width-aligned gram of
     // b, i.e. is exactly a pair the string-keyed join would also emit — so
     // the verified output is bit-identical to (width, gram-string) keying.
-    // Each (a, b) still joins at most once: `a` carries exactly one key and
-    // b's key array is value-distinct.
-    val grams = rows
-      .select(col("image_id").as("b"), col("caption_norm").as("b_text"),
-        col("span").as("b_span"),
+    // Each caption pair still joins at most once: an anchor carries exactly
+    // one key and b's key array is value-distinct.
+    val grams = captions
+      .select(col("caption_norm").as("b_text"), col("span").as("b_span"),
         explode(graft.functions.GraftExpressions
           .wordGramKeys(spark, col("caption_norm"), k, widthMask)).as("gram_key"))
-    anchors.join(grams, Seq("gram_key"))
-      .filter(col("a") =!= col("b") && col("a_span") < col("b_span") &&
+    val captionPairs = anchors.join(grams, Seq("gram_key"))
+      .filter(col("a_span") < col("b_span") &&
         // word-aligned verbatim containment of the full shorter caption:
         // prefix+space, space-wrapped infix, or space+suffix
         (col("b_text").startsWith(concat(col("a_text"), lit(" "))) ||
          col("b_text").contains(concat(lit(" "), col("a_text"), lit(" "))) ||
          col("b_text").endsWith(concat(lit(" "), col("a_text")))))
-      .select(col("a"), col("b"))
+      .select("a_text", "a_span", "b_text", "b_span")
+    // Back to rows: every member of a's caption × every member of b's. Each
+    // row has one (caption, span), so distinct caption pairs expand to
+    // distinct row pairs, and a ≠ b because the two captions differ. Both
+    // sides join the one member frame, aliased, so they share its exchange.
+    val members = gated.select(col("image_id"), col("caption_norm"), col("span"))
+    val (ma, mb) = (members.as("ma"), members.as("mb"))
+    captionPairs
+      .join(ma, col("a_text") === col("ma.caption_norm") && col("a_span") === col("ma.span"))
+      .join(mb, col("b_text") === col("mb.caption_norm") && col("b_span") === col("mb.span"))
+      .select(col("ma.image_id").as("a"), col("mb.image_id").as("b"))
   }
 }

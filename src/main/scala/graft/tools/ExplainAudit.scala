@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.core.GraftConfig
 import graft.fixtures.SyntheticImages
-import graft.pipeline.{Candidates, Fingerprints}
+import graft.pipeline.{Candidates, Fingerprints, Substring}
 import graft.queries.Queries
 
 /** Physical-plan audit: writes `explain("formatted")` for the hot operators
@@ -49,6 +49,8 @@ object ExplainAudit {
     dump("simhash_pairs", Candidates.simhashPairs(fps, cfg, cfg.sigmaHigh))
     dump("band_pairs", Candidates.bandPairs(fps, cfg))
     dump("all_candidates", Candidates.allCandidates(fps, cfg))
+    dump("substring_pairs", Substring.substringPairs(
+      fps.toDF().select("image_id", "caption_norm", "span"), cfg))
 
     Seq("q1_agg", "q2_join", "q3_window", "q6_join_dims", "dedup_ngram_jaccard",
       "sim_cosine_topk", "dedup_exact").foreach { q =>

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.SampleExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-import graft.core.{GraftConfig, MinHashCore}
+import graft.core.{GraftConfig, MinHashCore, SimHashCore}
 import graft.model.FingerprintRow
 import graft.pipeline.Candidates
 
@@ -27,6 +27,11 @@ import graft.pipeline.Candidates
   *
   * `allCandidates` runs both generators through one bucket join; it must
   * equal the union of the standalone passes, and sample hot keys once.
+  *
+  * At sigma < nBlocks the simhash pass splits into sigma + 1 blocks, the
+  * fewest the pigeonhole argument allows, so its output must equal the
+  * verify definition itself (Hamming <= sigma, span-compatible) at 64 and
+  * 128 bits, whatever larger nBlocks the config names.
   */
 class BucketExactnessSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -158,5 +163,46 @@ class BucketExactnessSpec extends AnyFunSuite {
     object Plans extends AdaptiveSparkPlanHelper
     val samples = Plans.collect(df.queryExecution.executedPlan) { case s: SampleExec => s }
     assert(samples.length === 1, df.queryExecution.executedPlan.toString)
+  }
+
+  /** 16 random fingerprints of `bits` bits, each planted 1-4 times with 0-3
+    * random bit flips anywhere in the full width, so copies sit at Hamming
+    * 0-6 from each other, some exactly equal; spans 100/120/140 make some
+    * near pairs span-incompatible.
+    */
+  private def flipped(rnd: scala.util.Random, bits: Int): Seq[FingerprintRow] =
+    (0 until 16).flatMap { f =>
+      val (hi, lo) = (rnd.nextLong(), if (bits == 128) rnd.nextLong() else 0L)
+      (0 until 1 + rnd.nextInt(4)).map { v =>
+        var (h, l) = (hi, lo)
+        (0 until rnd.nextInt(4)).foreach { _ =>
+          val b = rnd.nextInt(bits)
+          if (b < 64) h ^= 1L << b else l ^= 1L << (b - 64)
+        }
+        FingerprintRow(f"r$f%02d_$v", h, Array.emptyLongArray,
+          Seq(100, 120, 140)(rnd.nextInt(3)), "", l)
+      }
+    }
+
+  test("simhash pairs at sigma 0-3 = brute-force Hamming <= sigma, span-compatible") {
+    import spark.implicits._
+    for (bits <- Seq(64, 128); trial <- 1 to 2) {
+      val rs = flipped(new scala.util.Random(5000 + 10 * bits + trial), bits)
+      def ham(a: FingerprintRow, b: FingerprintRow) =
+        java.lang.Long.bitCount(a.simhash ^ b.simhash) +
+          java.lang.Long.bitCount(a.simhash_lo ^ b.simhash_lo)
+      val want = (0 to 3).map(s => expected(rs, (a, b) =>
+        ham(a, b) <= s && SimHashCore.spanCompatible(a.span, b.span)))
+      assert(want.distinct.length === 4, s"bits $bits trial $trial: sigmas do not differ")
+      val ds = rs.toDS()
+      for (nBlocks <- Seq(GraftConfig().nBlocks, 8); sigma <- 0 to 3) {
+        val got = collectPairs(Candidates.simhashPairs(
+          ds, GraftConfig(bits = bits, nBlocks = nBlocks), sigma, expandPairs = true))
+        assert(got.distinct.length === got.length,
+          s"bits $bits trial $trial nBlocks $nBlocks sigma $sigma: duplicate pairs")
+        assert(got.toSet === want(sigma),
+          s"bits $bits trial $trial nBlocks $nBlocks sigma $sigma: pairs diverge")
+      }
+    }
   }
 }

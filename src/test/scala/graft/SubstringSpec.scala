@@ -110,6 +110,43 @@ class SubstringSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  test("caption collapse parity: duplicated captions pair every member") {
+    // Each caption, runs included, appears 1-4 times under distinct ids:
+    // the anchor join runs once per distinct caption, and every verified
+    // caption pair must come back for every member on both sides.
+    val word = Gen.oneOf("a", "to", "cat", "dog", "blue", "red", "moon", "x")
+    val caption = Gen.choose(1, 8).flatMap(Gen.listOfN(_, word)).map(_.mkString(" "))
+    def runOf(c: String): Gen[String] = {
+      val toks = c.split(" ")
+      for {
+        i <- Gen.choose(0, toks.length - 1)
+        j <- Gen.choose(i + 1, toks.length)
+      } yield toks.slice(i, j).mkString(" ")
+    }
+    val corpus = for {
+      base <- Gen.listOfN(8, caption)
+      runs <- Gen.listOfN(8, Gen.oneOf(base).flatMap(runOf))
+      copies <- Gen.listOfN(16, Gen.choose(1, 4))
+      k <- Gen.choose(1, 3)
+    } yield ((base ++ runs).zip(copies).zipWithIndex.flatMap { case ((c, n), i) =>
+      (0 until n).map(j => s"r${i}_$j" -> c)
+    }, k)
+
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25),
+      Prop.forAllNoShrink(corpus) { case (caps, k) =>
+        val cfg = GraftConfig(shingleK = k, minSpan = 4)
+        val got = Substring.substringPairs(rows(caps: _*), cfg)
+          .collect().map(x => (x.getString(0), x.getString(1))).toSet
+        val want = (for {
+          (ia, a) <- caps; (ib, b) <- caps
+          if a.length > cfg.minSpan && a.length < b.length &&
+            (b.startsWith(a + " ") || b.contains(" " + a + " ") || b.endsWith(" " + a))
+        } yield (ia, ib)).toSet
+        (got == want) :| s"k=$k missing=${want -- got} extra=${got -- want}"
+      })
+    assert(res.passed, res.status.toString)
+  }
+
   test("pipeline catches a substring pair invisible to SimHash and MinHash") {
     val noise1 = (1 to 30).map(i => s"w$i").mkString(" ")
     val noise2 = (31 to 60).map(i => s"w$i").mkString(" ")
