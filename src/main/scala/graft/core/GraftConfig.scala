@@ -25,16 +25,10 @@ package graft.core
   *                       EigenWordGenerate.cpp:90-95); default sized for
   *                       captions, reference value kept in
   *                       [[GraftConfig.referenceGate]]
-  * @param spanRatio      candidate span prefilter `|t1-t2| <= ratio*min` —
-  *                       hard-coded 0.3 in /root/reference/SimHasher.cpp:96-99
   * @param sigmaHigh      high-tier Hamming threshold (dif_config.txt line 2 = 1)
   * @param minhashK       MinHash signature length
   * @param rowsPerBand    LSH band height (bands = minhashK / rowsPerBand)
   * @param jaccardTau     Jaccard verification threshold for band candidates
-  * @param nBlocks        upper bound on the SimHash pigeonhole block count:
-  *                       a pass at Hamming threshold sigma splits into
-  *                       min(nBlocks, sigma + 1) blocks, the fewest that
-  *                       keep it exact (so nBlocks must be > sigmaHigh)
   * @param hotBucketCap   bucket size above which salting kicks in (north_rule
   *                       "explicit salting of hot LSH buckets")
   * @param debugDump      flag-gated debug dump sinks (SURVEY.md §2.1 S5):
@@ -46,7 +40,6 @@ package graft.core
   *                       (/root/reference/EigenWord.cpp:47-69,
   *                       CloneSet.cpp:174-177), as queryable tables instead
   *                       of driver-local text files
-  * @param seed           deterministic seed for MinHash permutations
   *
   * Defaults for shingleK/jaccardTau were picked with `graft.tools.Calibrate`
   * (pure-core sweep over planted perturbation families): word-2-gram
@@ -63,22 +56,16 @@ final case class GraftConfig(
     shingleK: Int = 2,
     weights: Map[String, Int] = GraftConfig.defaultWeights,
     minSpan: Int = 12,
-    spanRatio: Double = 0.3,
     sigmaHigh: Int = 1,
     minhashK: Int = 64,
     rowsPerBand: Int = 2,
     jaccardTau: Double = 0.35,
-    nBlocks: Int = 4,
     hotBucketCap: Int = 500,
     substringPass: Boolean = true,
-    debugDump: Boolean = false,
-    seed: Long = 42L
+    debugDump: Boolean = false
 ) {
-  require(nBlocks > sigmaHigh, "pigeonhole completeness needs nBlocks > sigmaHigh")
   require(minhashK % rowsPerBand == 0, "minhashK must divide into bands")
   require(bits == 64 || bits == 128, "fingerprint width is 64 (production) or 128 (reference-exact)")
-  require(bits == 64 || nBlocks % 2 == 0,
-    "128-bit mode splits blocks evenly across the (hi, lo) words — nBlocks must be even")
 
   def weightOf(kind: String): Int =
     weights.getOrElse(kind, weights.getOrElse(GraftConfig.Default, 1))

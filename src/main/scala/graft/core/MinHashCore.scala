@@ -10,6 +10,9 @@ package graft.core
   */
 object MinHashCore {
 
+  /** Seed of the production MinHash permutations. */
+  val Seed: Long = 42L
+
   /** Per-permutation xor/mix parameters, derived from the seed. One batched
     * pass computes all k minima per row (SURVEY.md §2.11) — O(tokens * k)
     * with no shuffle, inside a single projection.

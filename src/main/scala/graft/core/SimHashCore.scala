@@ -129,29 +129,14 @@ object SimHashCore {
   def hamming128(a: (Long, Long), b: (Long, Long)): Int =
     java.lang.Long.bitCount(a._1 ^ b._1) + java.lang.Long.bitCount(a._2 ^ b._2)
 
-  /** Candidate-pair span prefilter — /root/reference/SimHasher.cpp:96-99:
-    * reject when |t1 - t2| > 0.3 * min(t1, t2). The 0.3 is hard-coded in
-    * the reference (the `dif_config.txt` value 80 is read but unused).
+  /** Span prefilter ratio, hard-coded 0.3 in the reference's
+    * SimHasher.cpp:96-99 (the `dif_config.txt` value 80 is read but unused).
     */
-  def spanCompatible(t1: Int, t2: Int, ratio: Double = 0.3): Boolean =
-    math.abs(t1 - t2) <= math.min(t1, t2) * ratio
+  val SpanRatio: Double = 0.3
 
-  /** Pigeonhole block split of a 64-bit fingerprint into `nBlocks` nearly
-    * equal bit ranges: any two fingerprints at Hamming distance <= nBlocks-1
-    * agree on at least one whole block (Manku et al., WWW'07). Returns the
-    * block values; block i covers bits [i*64/n, (i+1)*64/n).
+  /** Candidate-pair span prefilter (SimHasher.cpp:96-99): reject when
+    * |t1 - t2| > [[SpanRatio]] * min(t1, t2).
     */
-  def bitBlocks(fp: Long, nBlocks: Int): Array[Long] = {
-    val out = new Array[Long](nBlocks)
-    var i = 0
-    while (i < nBlocks) {
-      val lo = (i * 64) / nBlocks
-      val hi = ((i + 1) * 64) / nBlocks // exclusive
-      val width = hi - lo
-      val mask = if (width == 64) -1L else (1L << width) - 1L
-      out(i) = (fp >>> lo) & mask
-      i += 1
-    }
-    out
-  }
+  def spanCompatible(t1: Int, t2: Int): Boolean =
+    math.abs(t1 - t2) <= math.min(t1, t2) * SpanRatio
 }

@@ -120,24 +120,4 @@ object GramHash {
     val w = math.min(k, nTok)
     Murmur3x64.hash128(bytes, 0, ends(w - 1), w.toLong)._1
   }
-
-  /** Count of common elements of two SORTED (ascending, signed) arrays with
-    * distinct elements each — the allocation-free Jaccard-intersection core
-    * (vs array_intersect's per-row OpenHashSet). Equals
-    * |set(a) ∩ set(b)| for the sorted-distinct gram arrays both fingerprint
-    * paths produce.
-    */
-  def sortedIntersectCount(a: Array[Long], b: Array[Long]): Int = {
-    var i = 0
-    var j = 0
-    var c = 0
-    while (i < a.length && j < b.length) {
-      val x = a(i)
-      val y = b(j)
-      if (x == y) { c += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    c
-  }
 }

@@ -34,12 +34,6 @@ final case class FingerprintRow(
     caption_norm: String = ""
 )
 
-final case class VerifiedEdge(a: String, b: String, tier: String, source: String)
-
-// cluster_id is the lexicographic-min member image_id (collision-free string
-// label; a 64-bit hash label collides at 10^12-row scale)
-final case class ClusterRow(image_id: String, cluster_id: String, tier: String)
-
 /** Audit/lineage row: one per (run, stage[, partition]) — the graft's
   * replacement for the reference's TCP progress events
   * (/root/reference/InfoStruct.h:16-236, SURVEY.md §2.1 S6). Also the

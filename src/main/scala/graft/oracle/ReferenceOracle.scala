@@ -1,6 +1,6 @@
 package graft.oracle
 
-import graft.core.{GraftConfig, SimHashCore}
+import graft.core.SimHashCore
 
 /** Sequential, single-threaded transcription of the reference's comparison
   * + clustering semantics (/root/reference/SimHasher.cpp:91-198,
@@ -53,27 +53,16 @@ object ReferenceOracle {
       (0 until parent.length).filter(inSet).groupBy(find).map { case (r, m) => r -> m.toVector }
   }
 
-  /** checkToCompare minus the AST-only clauses (SimHasher.cpp:91-122):
-    * span prefilter + optional same/diff-group compare modes.
-    */
-  def checkToCompare(a: Item, b: Item, cfg: GraftConfig,
-                     onlyDiffGroup: Boolean = false, onlySameGroup: Boolean = false): Boolean = {
-    if (!SimHashCore.spanCompatible(a.span, b.span, cfg.spanRatio)) false
-    else if (onlyDiffGroup && a.group == b.group) false
-    else if (onlySameGroup && a.group != b.group) false
-    else true
-  }
-
   /** Greedy clique clustering at one sigma tier; returns (pairs joined,
     * clusters as sets of ids). Pairs are exactly the reference's `join`
     * calls (SimHasher.cpp:177-184) — the ground truth for dup-pair recall.
     */
-  def cluster(items: IndexedSeq[Item], sigma: Int, cfg: GraftConfig,
+  def cluster(items: IndexedSeq[Item], sigma: Int,
               onlyDiffGroup: Boolean = false, onlySameGroup: Boolean = false)
       : (Vector[(String, String)], Vector[Set[String]]) =
     clusterCore[Item](items, _.id, _.span, _.group,
       (a, b) => SimHashCore.hamming(a.fingerprint, b.fingerprint),
-      sigma, cfg, onlyDiffGroup, onlySameGroup)
+      sigma, onlyDiffGroup, onlySameGroup)
 
   /** 128-bit item (the reference's full fingerprint width, packed hi/lo per
     * SimHashCore.simhash128); distance = bitCount(hi^hi') + bitCount(lo^lo').
@@ -84,20 +73,20 @@ object ReferenceOracle {
     * span prefilter, Hamming over both words (SimHasher.cpp:195-198 operates
     * on the full 128-bit bitset).
     */
-  def cluster128(items: IndexedSeq[Item128], sigma: Int, cfg: GraftConfig,
+  def cluster128(items: IndexedSeq[Item128], sigma: Int,
                  onlyDiffGroup: Boolean = false, onlySameGroup: Boolean = false)
       : (Vector[(String, String)], Vector[Set[String]]) =
     clusterCore[Item128](items, _.id, _.span, _.group,
       (a, b) => SimHashCore.hamming128((a.hi, a.lo), (b.hi, b.lo)),
-      sigma, cfg, onlyDiffGroup, onlySameGroup)
+      sigma, onlyDiffGroup, onlySameGroup)
 
   private def clusterCore[A](items: IndexedSeq[A], id: A => String, span: A => Int,
                              group: A => String, ham: (A, A) => Int,
-                             sigma: Int, cfg: GraftConfig,
-                             onlyDiffGroup: Boolean, onlySameGroup: Boolean)
+                             sigma: Int, onlyDiffGroup: Boolean, onlySameGroup: Boolean)
       : (Vector[(String, String)], Vector[Set[String]]) = {
+    // checkToCompare minus the AST-only clauses (SimHasher.cpp:91-122)
     def toCompare(a: A, b: A): Boolean =
-      if (!SimHashCore.spanCompatible(span(a), span(b), cfg.spanRatio)) false
+      if (!SimHashCore.spanCompatible(span(a), span(b))) false
       else if (onlyDiffGroup && group(a) == group(b)) false
       else if (onlySameGroup && group(a) != group(b)) false
       else true

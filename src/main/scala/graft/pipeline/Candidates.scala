@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
-import graft.core.{GraftConfig, MinHashCore}
+import graft.core.{GraftConfig, MinHashCore, SimHashCore}
 import graft.model.FingerprintRow
 
 /** Candidate generation + verification (SURVEY.md §2.4 J2-J4, §2.7).
@@ -13,7 +13,7 @@ import graft.model.FingerprintRow
   * generators feed:
   *
   *  - SimHash pigeonhole bit-block buckets (Manku et al., WWW'07): split the
-  *    64-bit fingerprint into min(nBlocks, sigma+1) ranges; any pair at
+  *    fingerprint into sigma + 1 bit ranges; any pair at
   *    Hamming <= sigma shares >= 1 identical block → an equi-join on
   *    (blockIdx, blockVal) yields an EXACT candidate superset for the
   *    sigma_high tier, then the reference's own predicates verify:
@@ -53,16 +53,16 @@ object Candidates {
     Seq("simhash", "simhash_lo").take(cfg.bits / 64)
 
   /** Pigeonhole block key rows (image_id, idx, key) of the representatives.
-    * The pass needs b = min(nBlocks, sigma + 1) blocks: sigma + 1 already
-    * makes the join exact (Hamming <= sigma ⇒ one whole block identical),
-    * and fewer, wider blocks make a smaller candidate superset. Each word
-    * splits into n = ceil(b / |words|) bit ranges, block i covering bits
+    * The pass splits into b = sigma + 1 blocks: the fewest that make the
+    * join exact (Hamming <= sigma ⇒ one whole block identical), and fewer,
+    * wider blocks make a smaller candidate superset. Each word splits into
+    * n = ceil(b / |words|) bit ranges, block i covering bits
     * [i*64/n, (i+1)*64/n) of its word — a disjoint partition of all 64 or
     * 128 bits into n * |words| >= b blocks, so the guarantee holds over the
     * full distance. Pure column math, codegen'd.
     */
   private def blockView(reps: DataFrame, cfg: GraftConfig, sigma: Int): DataFrame = {
-    val b = math.min(cfg.nBlocks, sigma + 1)
+    val b = sigma + 1
     val n = (b + words(cfg).length - 1) / words(cfg).length
     val blocks = for ((w, wi) <- words(cfg).zipWithIndex; i <- 0 until n) yield {
       val lo = (i * 64) / n
@@ -267,8 +267,8 @@ object Candidates {
           case (r, s) => (r, Some(s))
         }
       val hamming = words(cfg).map(w => bit_count(col("l_" + w).bitwiseXOR(col("r_" + w))))
-      val spanOk =
-        abs(col("l_span") - col("r_span")) <= least(col("l_span"), col("r_span")) * cfg.spanRatio
+      val spanOk = abs(col("l_span") - col("r_span")) <=
+        least(col("l_span"), col("r_span")) * SimHashCore.SpanRatio
       val groupOk = if (onlyDiffGroup) col("l_group") =!= col("r_group") else lit(true)
       Some(Generator("simhash", blockView(reps, cfg, sigma), reps,
         hamming.reduce(_ + _) <= lit(sigma) && spanOk && groupOk, star))
@@ -288,12 +288,12 @@ object Candidates {
     // bytes and compares ~3x faster (the band join was the pipeline's
     // largest exchange, 910 MB at 257k images). A fold collision
     // (p ~ 2^-64) can only ADD a candidate, which the exact verify rejects.
-    val (k, seed, rpb) = (cfg.minhashK, cfg.seed, cfg.rowsPerBand)
+    val (k, rpb) = (cfg.minhashK, cfg.rowsPerBand)
     val spark0 = fps.sparkSession
     import spark0.implicits._
     val keys = reps.as[(String, Array[Long])]
       .mapPartitions { iter =>
-        val perms = MinHashCore.permutations(k, seed)
+        val perms = MinHashCore.permutations(k, MinHashCore.Seed)
         iter.map { case (id, grams) =>
           (id, MinHashCore.bandHashes(MinHashCore.signature(grams, 0, grams.length, perms), rpb))
         }

@@ -215,8 +215,8 @@ object Clustering {
     * from one driver natively. If any tier fails, every tier is awaited and
     * the finished ones are released before the first error is rethrown.
     */
-  def tieredClustersResults(vertices: DataFrame,
-                            edgesByTier: Seq[(String, DataFrame)])
+  private def tieredClustersResults(vertices: DataFrame,
+                                    edgesByTier: Seq[(String, DataFrame)])
       : Seq[(String, CCResult)] = {
     if (edgesByTier.size <= 1)
       edgesByTier.map { case (tier, edges) =>

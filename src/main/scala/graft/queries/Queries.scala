@@ -132,8 +132,7 @@ object Queries {
     sharedFrame(s, dir, "tiered") {
       Clustering.tieredClusters(fps.toDF().select("image_id"), Seq(
         "high" -> Candidates.simhashPairs(fps, docCfg, sigmaTierHigh),
-        "normal" -> Candidates.simhashPairs(
-          fps, docCfg.copy(nBlocks = 8), sigmaTierNormal)))
+        "normal" -> Candidates.simhashPairs(fps, docCfg, sigmaTierNormal)))
     }
   }
 

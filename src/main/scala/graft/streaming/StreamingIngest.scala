@@ -17,28 +17,25 @@ import graft.pipeline.Fingerprints
   */
 object StreamingIngest {
 
+  /** The image table's schema (`ImageRow`), for the streaming readers. */
+  private val imageSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "image_id STRING, bytes BINARY, w INT, h INT, fmt STRING, caption STRING, phash BIGINT")
+
   /** Streaming fingerprint ingest: readStream over the image table's
     * directory → per-row fingerprints (no shuffle, no state). The sink is
     * left to the caller (parquet append / memory for tests).
     */
   def fingerprintStream(spark: SparkSession, sourceDir: String,
-                        cfg: GraftConfig): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "image_id STRING, bytes BINARY, w INT, h INT, fmt STRING, caption STRING, phash BIGINT")
-    val stream = spark.readStream.schema(schema).parquet(sourceDir)
-    Fingerprints.compute(stream, cfg).toDF()
-  }
+                        cfg: GraftConfig): DataFrame =
+    Fingerprints.compute(spark.readStream.schema(imageSchema).parquet(sourceDir), cfg).toDF()
 
   /** Streaming content-identity ingest for the stateful exact-dedup
     * operator: readStream over the image table's directory → 128-bit
     * content rows ([[StreamingDedup.contentRows]] — stateless projection).
     */
   def contentStream(spark: SparkSession, sourceDir: String)
-      : org.apache.spark.sql.Dataset[StreamingDedup.ContentRow] = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "image_id STRING, bytes BINARY, w INT, h INT, fmt STRING, caption STRING, phash BIGINT")
-    StreamingDedup.contentRows(spark.readStream.schema(schema).parquet(sourceDir))
-  }
+      : org.apache.spark.sql.Dataset[StreamingDedup.ContentRow] =
+    StreamingDedup.contentRows(spark.readStream.schema(imageSchema).parquet(sourceDir))
 
   /** Watermarked tumbling-window event aggregation (the generic streaming
     * agg shape: counts + value sums per type per window).

@@ -41,7 +41,7 @@ object Calibrate {
     } yield GraftConfig(
       shingleK = k,
       weights = Map("CAPGRAM" -> 3, "CAPWORD" -> capw, "PHASH" -> 2, "DEFAULT" -> 1),
-      sigmaHigh = sigma, nBlocks = sigma + 1, jaccardTau = tau)
+      sigmaHigh = sigma, jaccardTau = tau)
 
     println(f"${"k"}%2s ${"capw"}%4s ${"sig"}%3s ${"tau"}%4s | near_cap  near_img | false_pair_rate")
     configs.foreach { cfg =>
@@ -55,7 +55,7 @@ object Calibrate {
           val v = fp(it)
           val ham = SimHashCore.hamming(base.simhash, v.simhash)
           val j = MinHashCore.jaccard(base.grams.toSet, v.grams.toSet)
-          val spanOk = SimHashCore.spanCompatible(base.span, v.span, cfg.spanRatio)
+          val spanOk = SimHashCore.spanCompatible(base.span, v.span)
           val hit = (spanOk && ham <= cfg.sigmaHigh) || j >= cfg.jaccardTau
           if (it.kind == "near_caption") { capTot += 1; if (hit) capHit += 1 }
           else { imgTot += 1; if (hit) imgHit += 1 }

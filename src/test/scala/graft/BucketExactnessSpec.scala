@@ -9,29 +9,26 @@ import graft.model.FingerprintRow
 import graft.pipeline.Candidates
 
 /** Randomized exactness characterization of the bucket joins (round-3
-  * VERDICT #7): the candidate sets must EQUAL their mathematical definition
-  * on random corpora — no pair missing (bucket key built from the wrong
-  * bits) and no pair manufactured — and the salted hot-bucket rewrite must
-  * produce the identical, exactly-once pair set. Block keys are the real
-  * block values. Band keys are `MinHashCore.bandHashes` folds of a band's
-  * lanes: a fold collision (p ~ 2^-64) could only add a candidate, which
-  * the exact verify rejects, so at these sizes the candidate set is the
-  * definition's. Deterministic seeds; 8 corpora per property.
+  * VERDICT #7): the pair sets must EQUAL their mathematical definition on
+  * random corpora — no pair missing (bucket key built from the wrong bits,
+  * too few blocks) and no pair manufactured — and the salted hot-bucket
+  * rewrite must produce the identical, exactly-once pair set. Deterministic
+  * seeds.
   *
-  * The characterizations use thresholds that pass every candidate
-  * (sigma = 64 / tau = 0), so the output IS the candidate set:
-  *  - simhash path: pair present ⟺ fingerprints share ≥ 1 identical
-  *    pigeonhole block (the Manku-style candidate definition);
-  *  - band path: pair present ⟺ the signatures of the two gram sets agree
-  *    on ALL lanes of ≥ 1 band (the Broder banding definition).
+  *  - band path: at tau = 0 every candidate passes the verify, so the output
+  *    IS the candidate set: pair present ⟺ the signatures of the two gram
+  *    sets agree on ALL lanes of ≥ 1 band (the Broder banding definition).
+  *    Band keys are `MinHashCore.bandHashes` folds of a band's lanes: a fold
+  *    collision (p ~ 2^-64) could only add a candidate, which the exact
+  *    verify rejects, so at these sizes the candidate set is the
+  *    definition's. 8 corpora.
+  *  - simhash path: the pass splits into sigma + 1 blocks, the fewest the
+  *    pigeonhole argument allows, so at every sigma its output must equal
+  *    the verify definition itself (Hamming <= sigma, span-compatible), at
+  *    64 and 128 bits, cold and salted.
   *
   * `allCandidates` runs both generators through one bucket join; it must
   * equal the union of the standalone passes, and sample hot keys once.
-  *
-  * At sigma < nBlocks the simhash pass splits into sigma + 1 blocks, the
-  * fewest the pigeonhole argument allows, so its output must equal the
-  * verify definition itself (Hamming <= sigma, span-compatible) at 64 and
-  * 128 bits, whatever larger nBlocks the config names.
   */
 class BucketExactnessSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -40,7 +37,7 @@ class BucketExactnessSpec extends AnyFunSuite {
   private val nRows = 36
 
   private def cfg(cap: Int) = GraftConfig(
-    minhashK = 8, rowsPerBand = 2, nBlocks = 4, jaccardTau = 0.0,
+    minhashK = 8, rowsPerBand = 2, jaccardTau = 0.0,
     hotBucketCap = cap)
 
   /** simhash with each 16-bit block drawn from a small per-block pool, so
@@ -69,10 +66,7 @@ class BucketExactnessSpec extends AnyFunSuite {
     }
   }
 
-  private val perms = MinHashCore.permutations(cfg(0).minhashK, cfg(0).seed)
-
-  private def sharedBlock(a: Long, b: Long): Boolean =
-    (0 until 4).exists(i => ((a >>> (i * 16)) & 0xffffL) == ((b >>> (i * 16)) & 0xffffL))
+  private val perms = MinHashCore.permutations(cfg(0).minhashK, MinHashCore.Seed)
 
   private def sharedBand(a: Array[Long], b: Array[Long]): Boolean =
     (0 until 4).exists(band =>
@@ -89,23 +83,6 @@ class BucketExactnessSpec extends AnyFunSuite {
 
   private def collectPairs(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
     df.select("a", "b").collect().map(r => (r.getString(0), r.getString(1))).toSeq
-
-  test("simhash block candidates = definition, salted == unsalted, exactly once") {
-    (1 to nTrials).foreach { trial =>
-      val rnd = new scala.util.Random(1000 + trial)
-      val rs = rows(rnd)
-      val want = expected(rs, (a, b) => sharedBlock(a.simhash, b.simhash))
-      import spark.implicits._
-      val ds = rs.toDS()
-      Seq(1000000, 2).foreach { cap => // cold-only vs forced-salting paths
-        val got = collectPairs(
-          Candidates.simhashPairs(ds, cfg(cap), sigma = 64, expandPairs = true))
-        assert(got.distinct.length === got.length,
-          s"trial $trial cap=$cap: duplicate pairs emitted")
-        assert(got.toSet === want, s"trial $trial cap=$cap: simhash candidate set diverges")
-      }
-    }
-  }
 
   test("minhash band candidates = definition, salted == unsalted, exactly once") {
     (1 to nTrials).foreach { trial =>
@@ -131,7 +108,7 @@ class BucketExactnessSpec extends AnyFunSuite {
   /** 16 four-bit blocks with sigma 15: block sharing and Hamming passes are
     * common on these corpora, so both sources yield pairs and overlap.
     */
-  private def fusedCfg(cap: Int) = cfg(cap).copy(nBlocks = 16, sigmaHigh = 15)
+  private def fusedCfg(cap: Int) = cfg(cap).copy(sigmaHigh = 15)
 
   test("allCandidates = standalone simhash ∪ band pairs, deduped by min(source)") {
     (1 to nTrials).foreach { trial =>
@@ -165,9 +142,9 @@ class BucketExactnessSpec extends AnyFunSuite {
     assert(samples.length === 1, df.queryExecution.executedPlan.toString)
   }
 
-  /** 16 random fingerprints of `bits` bits, each planted 1-4 times with 0-3
+  /** 16 random fingerprints of `bits` bits, each planted 1-4 times with 0-6
     * random bit flips anywhere in the full width, so copies sit at Hamming
-    * 0-6 from each other, some exactly equal; spans 100/120/140 make some
+    * 0-12 from each other, some exactly equal; spans 100/120/140 make some
     * near pairs span-incompatible.
     */
   private def flipped(rnd: scala.util.Random, bits: Int): Seq[FingerprintRow] =
@@ -175,7 +152,7 @@ class BucketExactnessSpec extends AnyFunSuite {
       val (hi, lo) = (rnd.nextLong(), if (bits == 128) rnd.nextLong() else 0L)
       (0 until 1 + rnd.nextInt(4)).map { v =>
         var (h, l) = (hi, lo)
-        (0 until rnd.nextInt(4)).foreach { _ =>
+        (0 until rnd.nextInt(7)).foreach { _ =>
           val b = rnd.nextInt(bits)
           if (b < 64) h ^= 1L << b else l ^= 1L << (b - 64)
         }
@@ -186,22 +163,24 @@ class BucketExactnessSpec extends AnyFunSuite {
 
   test("simhash pairs at sigma 0-3 = brute-force Hamming <= sigma, span-compatible") {
     import spark.implicits._
+    val sigmas = 0 to 6
     for (bits <- Seq(64, 128); trial <- 1 to 2) {
       val rs = flipped(new scala.util.Random(5000 + 10 * bits + trial), bits)
       def ham(a: FingerprintRow, b: FingerprintRow) =
         java.lang.Long.bitCount(a.simhash ^ b.simhash) +
           java.lang.Long.bitCount(a.simhash_lo ^ b.simhash_lo)
-      val want = (0 to 3).map(s => expected(rs, (a, b) =>
+      val want = sigmas.map(s => expected(rs, (a, b) =>
         ham(a, b) <= s && SimHashCore.spanCompatible(a.span, b.span)))
-      assert(want.distinct.length === 4, s"bits $bits trial $trial: sigmas do not differ")
+      assert(Seq(0, 3, 6).map(want).distinct.length === 3,
+        s"bits $bits trial $trial: the pairs do not grow with sigma")
       val ds = rs.toDS()
-      for (nBlocks <- Seq(GraftConfig().nBlocks, 8); sigma <- 0 to 3) {
+      for (cap <- Seq(GraftConfig().hotBucketCap, 2); sigma <- sigmas) { // cold vs salted
         val got = collectPairs(Candidates.simhashPairs(
-          ds, GraftConfig(bits = bits, nBlocks = nBlocks), sigma, expandPairs = true))
+          ds, GraftConfig(bits = bits, hotBucketCap = cap), sigma, expandPairs = true))
         assert(got.distinct.length === got.length,
-          s"bits $bits trial $trial nBlocks $nBlocks sigma $sigma: duplicate pairs")
+          s"bits $bits trial $trial cap $cap sigma $sigma: duplicate pairs")
         assert(got.toSet === want(sigma),
-          s"bits $bits trial $trial nBlocks $nBlocks sigma $sigma: pairs diverge")
+          s"bits $bits trial $trial cap $cap sigma $sigma: pairs diverge")
       }
     }
   }

@@ -90,29 +90,6 @@ class SimHashCoreSpec extends AnyFunSuite {
     assert(SimHashCore.spanCompatible(260, 200))  // symmetric (min side)
     assert(!SimHashCore.spanCompatible(261, 200))
   }
-
-  test("bit-block pigeonhole: hamming <= nBlocks-1 pairs share a block (sampled)") {
-    val rng = new scala.util.Random(11)
-    val n = 4
-    (1 to 500).foreach { _ =>
-      val x = rng.nextLong()
-      val flips = rng.nextInt(n) // 0..3 bit flips
-      var y = x
-      (1 to flips).foreach(_ => y ^= (1L << rng.nextInt(64)))
-      val bx = SimHashCore.bitBlocks(x, n)
-      val by = SimHashCore.bitBlocks(y, n)
-      assert(bx.indices.exists(i => bx(i) == by(i)),
-        s"hamming=${SimHashCore.hamming(x, y)} pair shares no block")
-    }
-  }
-
-  test("bit-block split is a partition of all 64 bits") {
-    val fp = -1L
-    Seq(3, 4, 5, 7).foreach { n =>
-      val total = SimHashCore.bitBlocks(fp, n).map(java.lang.Long.bitCount).sum
-      assert(total === 64, s"nBlocks=$n")
-    }
-  }
 }
 
 class MinHashCoreSpec extends AnyFunSuite {

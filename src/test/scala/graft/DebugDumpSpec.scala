@@ -62,7 +62,7 @@ class DebugDumpSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-dump128").toString
     val io = new ParquetTableIO(spark, root)
     val audit = new Audit(spark, io, runId = "dump128_test")
-    val cfg128 = cfg.copy(bits = 128, nBlocks = 4)
+    val cfg128 = cfg.copy(bits = 128)
     val res = DedupPipeline.run(corpus(), cfg128, audit = Some(audit))
     val fps = res.fingerprints.collect()
       .map(f => f.image_id -> ((f.simhash, f.simhash_lo))).toMap

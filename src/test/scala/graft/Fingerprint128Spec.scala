@@ -43,7 +43,7 @@ class Fingerprint128Spec extends AnyFunSuite {
     val brute = (for {
       i <- fps.indices.iterator
       j <- (i + 1) until fps.length
-      if SimHashCore.spanCompatible(fps(i).span, fps(j).span, cfg.spanRatio)
+      if SimHashCore.spanCompatible(fps(i).span, fps(j).span)
       if SimHashCore.hamming128((fps(i).simhash, fps(i).simhash_lo),
         (fps(j).simhash, fps(j).simhash_lo)) <= cfg.sigmaHigh
     } yield {
@@ -62,7 +62,7 @@ class Fingerprint128Spec extends AnyFunSuite {
     val items = fps.sortBy(_.image_id)
       .map(f => ReferenceOracle.Item128(f.image_id, f.simhash, f.simhash_lo, f.span))
       .toIndexedSeq
-    val oracle = ReferenceOracle.cluster128(items, cfg.sigmaHigh, cfg)._2
+    val oracle = ReferenceOracle.cluster128(items, cfg.sigmaHigh)._2
     val predicted = result.clusters.collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     val recall = ReferenceOracle.dupPairRecall(oracle, predicted)

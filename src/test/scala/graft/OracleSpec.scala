@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.GraftConfig
 import graft.oracle.ReferenceOracle
 import graft.oracle.ReferenceOracle.Item
 
@@ -9,17 +8,15 @@ import graft.oracle.ReferenceOracle.Item
   * greedy-clique vs connected-components divergence.
   */
 class OracleSpec extends AnyFunSuite {
-  val cfg = GraftConfig()
-
   test("sigma tiers: hamming<=1 joins at high tier; sigma=-1 joins nothing (dif_config.txt)") {
     val items = Vector(
       Item("a", 0x0L, 100),
       Item("b", 0x1L, 100), // d(a,b)=1
       Item("c", 0x3L, 100)  // d(b,c)=1, d(a,c)=2
     )
-    val (pairsHigh, _) = ReferenceOracle.cluster(items, sigma = 1, cfg)
+    val (pairsHigh, _) = ReferenceOracle.cluster(items, sigma = 1)
     assert(pairsHigh.nonEmpty)
-    val (pairsNormal, clustersNormal) = ReferenceOracle.cluster(items, sigma = -1, cfg)
+    val (pairsNormal, clustersNormal) = ReferenceOracle.cluster(items, sigma = -1)
     assert(pairsNormal.isEmpty && clustersNormal.isEmpty)
   }
 
@@ -28,7 +25,7 @@ class OracleSpec extends AnyFunSuite {
     // all three (SimHasher.cpp:138-147); scan from newest (C) first:
     // C pairs with B (d=1); A then has no free partner -> {B,C}, {A} alone.
     val items = Vector(Item("A", 0x0L, 100), Item("B", 0x1L, 100), Item("C", 0x3L, 100))
-    val (pairs, clusters) = ReferenceOracle.cluster(items, sigma = 1, cfg)
+    val (pairs, clusters) = ReferenceOracle.cluster(items, sigma = 1)
     assert(pairs === Vector(("C", "B")))
     assert(clusters === Vector(Set("B", "C")))
     // CC over the verified-edge set {A-B, B-C} merges all three: recall of
@@ -39,17 +36,17 @@ class OracleSpec extends AnyFunSuite {
 
   test("span prefilter rejects pairs before hamming (SimHasher.cpp:96-99)") {
     val items = Vector(Item("a", 0L, 200), Item("b", 0L, 261)) // identical fp, bad span
-    val (pairs, _) = ReferenceOracle.cluster(items, sigma = 1, cfg)
+    val (pairs, _) = ReferenceOracle.cluster(items, sigma = 1)
     assert(pairs.isEmpty)
     val ok = Vector(Item("a", 0L, 200), Item("b", 0L, 260))
-    assert(ReferenceOracle.cluster(ok, sigma = 1, cfg)._1.nonEmpty)
+    assert(ReferenceOracle.cluster(ok, sigma = 1)._1.nonEmpty)
   }
 
   test("same/diff group compare modes (SimHasher.cpp:111-122)") {
     val items = Vector(Item("a", 0L, 100, "f1"), Item("b", 0L, 100, "f1"), Item("c", 0L, 100, "f2"))
-    val (diffPairs, _) = ReferenceOracle.cluster(items, 1, cfg, onlyDiffGroup = true)
+    val (diffPairs, _) = ReferenceOracle.cluster(items, 1, onlyDiffGroup = true)
     assert(diffPairs.forall { case (x, y) => x == "c" || y == "c" })
-    val (samePairs, _) = ReferenceOracle.cluster(items, 1, cfg, onlySameGroup = true)
+    val (samePairs, _) = ReferenceOracle.cluster(items, 1, onlySameGroup = true)
     assert(samePairs === Vector(("b", "a")))
   }
 
@@ -57,7 +54,7 @@ class OracleSpec extends AnyFunSuite {
     // Four identical fingerprints: one pass clusters them all into one set.
     val items = Vector.tabulate(4)(i => Item(s"x$i", 0xf0L, 100))
     // weight sums make fp identical; with sigma=1 all pairwise d=0
-    val (pairs, clusters) = ReferenceOracle.cluster(items, 1, cfg)
+    val (pairs, clusters) = ReferenceOracle.cluster(items, 1)
     assert(clusters.size === 1 && clusters.head.size === 4)
     assert(pairs.size === 3) // newest scans and joins the other three once
   }

@@ -48,7 +48,7 @@ class PipelineE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       .sortBy(_.image_id)
       .map((f: FingerprintRow) => ReferenceOracle.Item(f.image_id, f.simhash, f.span))
       .toIndexedSeq
-    ReferenceOracle.cluster(items, cfg.sigmaHigh, cfg)._2
+    ReferenceOracle.cluster(items, cfg.sigmaHigh)._2
   }
 
   test("dup-pair recall vs reference oracle is 1.0 (>= 0.99 target)") {

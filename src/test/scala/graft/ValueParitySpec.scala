@@ -23,7 +23,7 @@ class ValueParitySpec extends AnyFunSuite {
       .select("doc_id", "text", "source").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
 
-  lazy val perms: Array[Long] = MinHashCore.permutations(cfg.minhashK, cfg.seed)
+  lazy val perms: Array[Long] = MinHashCore.permutations(cfg.minhashK, MinHashCore.Seed)
 
   case class Fp(id: Long, sim: Long, span: Int, grams: Array[Long],
                 sig: Array[Long], group: String)
@@ -49,7 +49,7 @@ class ValueParitySpec extends AnyFunSuite {
   lazy val bruteSimPairs: Set[(Long, Long)] = (for {
     i <- fps.indices.iterator
     j <- (i + 1) until fps.length
-    if SimHashCore.spanCompatible(fps(i).span, fps(j).span, cfg.spanRatio)
+    if SimHashCore.spanCompatible(fps(i).span, fps(j).span)
     if SimHashCore.hamming(fps(i).sim, fps(j).sim) <= cfg.sigmaHigh
   } yield unordered(fps(i).id, fps(j).id)).toSet
 
@@ -100,7 +100,7 @@ class ValueParitySpec extends AnyFunSuite {
       i <- byGroup.indices.iterator
       j <- (i + 1) until byGroup.length
       if byGroup(i).group != byGroup(j).group
-      if SimHashCore.spanCompatible(byGroup(i).span, byGroup(j).span, cfg.spanRatio)
+      if SimHashCore.spanCompatible(byGroup(i).span, byGroup(j).span)
       if SimHashCore.hamming(byGroup(i).sim, byGroup(j).sim) <= cfg.sigmaHigh
     } yield unordered(byGroup(i).id, byGroup(j).id)).toSet
     assert(collectPairs("dedup_simhash_pairs_diffgroup") === want)
@@ -160,7 +160,7 @@ class ValueParitySpec extends AnyFunSuite {
         for {
           i <- fps.indices
           j <- (i + 1) until fps.length
-          if SimHashCore.spanCompatible(fps(i).span, fps(j).span, cfg.spanRatio)
+          if SimHashCore.spanCompatible(fps(i).span, fps(j).span)
           if SimHashCore.hamming(fps(i).sim, fps(j).sim) <= sigma
         } {
           val (ra, rb) = (find(idx(fps(i).id)), find(idx(fps(j).id)))
