@@ -126,22 +126,30 @@ object GraftExpressions {
   // (public API end to end; also makes the functions SQL-addressable).
   // Registration is createOrReplace, hence idempotent per session.
 
+  // Arguments are checked when a call is analysed, so a malformed SQL call
+  // fails naming its function instead of crashing a task (k < 1 would read
+  // gram end -1 in GramHash.leadingKey).
   private def intLit(e: Expression, fn: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(
       s"$fn expects a literal int k, got $other")
   }
 
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_sorted_intersect_count" ->
-      ((args: Seq[Expression]) => SortedIntersectCount(args(0), args(1))),
-    "graft_word_gram_keys" ->
-      ((args: Seq[Expression]) =>
-        WordGramKeyArray(args(0), intLit(args(1), "graft_word_gram_keys"),
-          if (args.length > 2) intLit(args(2), "graft_word_gram_keys") else -1)),
-    "graft_leading_gram_key" ->
-      ((args: Seq[Expression]) =>
-        LeadingGramKey(args(0), intLit(args(1), "graft_leading_gram_key")))
+  private def kLit(e: Expression, fn: String): Int = intLit(e, fn) match {
+    case k if k >= 1 => k
+    case k => throw new IllegalArgumentException(s"$fn expects k >= 1, got $k")
+  }
+
+  private val fns: Seq[(String, PartialFunction[Seq[Expression], Expression])] = Seq(
+    "graft_sorted_intersect_count" -> { case Seq(a, b) => SortedIntersectCount(a, b) },
+    "graft_word_gram_keys" -> {
+      case Seq(t, k) => WordGramKeyArray(t, kLit(k, "graft_word_gram_keys"))
+      case Seq(t, k, mask) => WordGramKeyArray(t, kLit(k, "graft_word_gram_keys"),
+        intLit(mask, "graft_word_gram_keys"))
+    },
+    "graft_leading_gram_key" -> {
+      case Seq(t, k) => LeadingGramKey(t, kLit(k, "graft_leading_gram_key"))
+    }
   )
 
   /** Idempotently register the graft functions in `spark`'s session
@@ -155,7 +163,8 @@ object GraftExpressions {
       registry.registerFunction(
         FunctionIdentifier(name),
         new ExpressionInfo(GraftExpressions.getClass.getCanonicalName, name),
-        builder)
+        (args: Seq[Expression]) => builder.applyOrElse(args, (a: Seq[Expression]) =>
+          throw new IllegalArgumentException(s"$name: wrong number of arguments (${a.length})")))
     }
   }
 

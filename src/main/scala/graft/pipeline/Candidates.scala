@@ -27,8 +27,10 @@ import graft.model.FingerprintRow
   *
   * Each generator emits key-only rows of its collapse representatives;
   * [[verifiedPairs]] joins them all in one salted [[bucketSelfJoin]] and
-  * verifies by payload join-back. `simhashPairs`/`bandPairs` pass one
-  * generator, [[allCandidates]] both.
+  * verifies by payload join-back. [[simhashPass]]/[[bandPairs]] pass one
+  * generator, [[allCandidates]] both. A [[SimhashPass]] tags each verified
+  * pair with its Hamming distance and group test, so one pass at sigma
+  * answers every sigma' <= sigma and the cross-group listing by filters.
   * Skew: buckets hotter than `hotBucketCap` are salted, exactly
   * ([[bucketSelfJoin]]); AQE skew-join handles the residual imbalance.
   */
@@ -43,14 +45,18 @@ object Candidates {
     * @param keys   key-only bucket rows (image_id, idx, key)
     * @param reps   representative rows: `image_id` + the payload `verify` reads
     * @param verify exact predicate over a candidate's l_/r_-prefixed payload
-    * @param star   (a=rep, b=member) identity edges; None when not collapsed
+    * @param star   (a=rep, b=member) identity edges
     */
   private case class Generator(source: String, keys: DataFrame, reps: DataFrame,
-                               verify: Column, star: Option[DataFrame])
+                               verify: Column, star: DataFrame)
 
   /** The simhash words at the config's width (LO only in 128-bit mode). */
   private def words(cfg: GraftConfig): Seq[String] =
     Seq("simhash", "simhash_lo").take(cfg.bits / 64)
+
+  /** Hamming distance of a candidate's l_/r_ simhash words, codegen'd. */
+  private def hamming(cfg: GraftConfig): Column =
+    words(cfg).map(w => bit_count(col("l_" + w).bitwiseXOR(col("r_" + w)))).reduce(_ + _)
 
   /** Pigeonhole block key rows (image_id, idx, key) of the representatives.
     * The pass splits into b = sigma + 1 blocks: the fewest that make the
@@ -222,9 +228,11 @@ object Candidates {
     * by id — a wide payload crosses the wire once per candidate, not once
     * per key row — and is kept iff that generator's predicate holds.
     *
-    * @return verified representative pairs (a, b, source), a < b
+    * @param carry columns over the l_/r_-prefixed payload kept on each pair
+    * @return verified representative pairs (a, b, source, carry...), a < b
     */
-  private def verifiedPairs(gens: Seq[Generator], cap: Int): DataFrame = {
+  private def verifiedPairs(gens: Seq[Generator], cap: Int,
+                            carry: Seq[Column] = Nil): DataFrame = {
     def tagged(rows: Generator => DataFrame): DataFrame = gens.zipWithIndex
       .map { case (g, i) => rows(g).withColumn("gen", lit(i)) }
       .reduce(_.unionByName(_, allowMissingColumns = true))
@@ -242,37 +250,26 @@ object Candidates {
     cand.join(side("a", "l_"), Seq("gen", "a"))
       .join(side("b", "r_"), Seq("gen", "b"))
       .filter(keep)
-      .select(col("a"), col("b"),
-        element_at(typedLit(gens.map(_.source)), col("gen") + 1).as("source"))
+      .select((col("a") +: col("b") +:
+        element_at(typedLit(gens.map(_.source)), col("gen") + 1).as("source") +: carry): _*)
   }
 
   /** The SimHash generator: bit-block keys, verified to Hamming <= sigma
-    * with the span prefilter and the optional diff-group mode
-    * (CloneBAS `SimHasher.cpp:91-122`). None for sigma < 0 (sigma_normal =
-    * -1 matches nothing, dif_config.txt:3).
+    * (>= 0) with the span prefilter (CloneBAS `SimHasher.cpp:91-122`).
     */
-  private def simhashGen(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int,
-                         onlyDiffGroup: Boolean): Option[Generator] =
-    if (sigma < 0) None
-    else {
-      // collapse rows with identical (simhash, span, group) — d=0 and
-      // span-compatible by construction — unless the diff-group mode needs
-      // per-row group checks. Projected first: the collapse shuffles every
-      // row, at ~50 B instead of the full row's gram array and caption.
-      val narrow = fps.toDF().select(
-        col("image_id"), col("simhash"), col("simhash_lo"), col("span"), col("group"))
-      val (reps, star) =
-        if (onlyDiffGroup) (narrow, None)
-        else collapseExact(narrow, Seq("simhash", "simhash_lo", "span", "group")) match {
-          case (r, s) => (r, Some(s))
-        }
-      val hamming = words(cfg).map(w => bit_count(col("l_" + w).bitwiseXOR(col("r_" + w))))
-      val spanOk = abs(col("l_span") - col("r_span")) <=
-        least(col("l_span"), col("r_span")) * SimHashCore.SpanRatio
-      val groupOk = if (onlyDiffGroup) col("l_group") =!= col("r_group") else lit(true)
-      Some(Generator("simhash", blockView(reps, cfg, sigma), reps,
-        hamming.reduce(_ + _) <= lit(sigma) && spanOk && groupOk, star))
-    }
+  private def simhashGen(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int): Generator = {
+    // collapse rows with identical (simhash, span, group) — d=0 and
+    // span-compatible by construction. Projected first: the collapse
+    // shuffles every row, at ~50 B instead of the full row's gram array and
+    // caption.
+    val (reps, star) = collapseExact(fps.toDF().select(
+      col("image_id"), col("simhash"), col("simhash_lo"), col("span"), col("group")),
+      Seq("simhash", "simhash_lo", "span", "group"))
+    val spanOk = abs(col("l_span") - col("r_span")) <=
+      least(col("l_span"), col("r_span")) * SimHashCore.SpanRatio
+    Generator("simhash", blockView(reps, cfg, sigma), reps,
+      hamming(cfg) <= lit(sigma) && spanOk, star)
+  }
 
   /** The MinHash band generator, verified by exact Jaccard >= tau. */
   private def bandGen(fps: Dataset[FingerprintRow], cfg: GraftConfig): Generator = {
@@ -306,33 +303,62 @@ object Candidates {
     val inter = graft.functions.GraftExpressions.sortedIntersectCount(
       spark0, col("l_grams"), col("r_grams"))
     val uni = size(col("l_grams")) + size(col("r_grams")) - inter
-    Generator("minhash_band", keys, reps, uni > 0 && inter >= uni * cfg.jaccardTau, Some(star))
+    Generator("minhash_band", keys, reps, uni > 0 && inter >= uni * cfg.jaccardTau, star)
   }
 
-  /** One generator's pair list. With `expandPairs = false` (pipeline
-    * default) it is star edges + representative pairs — complete only UP TO
-    * connected-component closure (members of an identity group don't repeat
-    * their representative's neighbor pairs). With `expandPairs = true` the
-    * full verified pair listing is returned (reference all-pairs semantics;
-    * see [[expandThroughStar]]).
+  /** A simhash pass as ONE frame, materialized in one job, of (a, b, d,
+    * cross, member) rows: each verified representative pair (a < b, Hamming
+    * distance d, cross = the groups differ) and, for every input row b, a
+    * member row (a = b's representative, d = 0, cross = false). A member
+    * shares its representative's collapse key (simhash, span, group), hence
+    * its distance, verify outcome and group test, so a view at any sigma' <=
+    * the pass's sigma is exact. `member` is a literal per branch: a view of
+    * an unmaterialized pass plans only the branch it reads.
     */
-  private def pairs(g: Generator, cfg: GraftConfig, expandPairs: Boolean): DataFrame = {
-    val verified = verifiedPairs(Seq(g), cfg.hotBucketCap).select("a", "b")
-    g.star match {
-      case None => verified
-      case Some(s) if expandPairs => expandThroughStar(verified, s, g.reps)
-      case Some(s) => verified.unionByName(s)
+  final case class SimhashPass(rows: DataFrame) {
+
+    /** Star edges + rep pairs: complete only UP TO connected-component
+      * closure (members don't repeat their representative's pairs).
+      */
+    def edges(sigma: Int): DataFrame =
+      rows.filter(col("d") <= sigma && col("a") =!= col("b")).select("a", "b")
+
+    /** The full verified pair listing (a, b, cross); see [[expandThroughStar]]. */
+    def listing(sigma: Int): DataFrame = {
+      val member = rows.filter(col("member"))
+      expandThroughStar(
+        rows.filter(!col("member") && col("d") <= sigma).select("a", "b", "cross"),
+        member.filter(col("a") =!= col("b")).select("a", "b"),
+        member.filter(col("a") === col("b")).select(col("a").as("image_id")),
+        within = Seq(lit(false).as("cross")))
     }
   }
 
-  /** SimHash bit-block pairs at Hamming <= sigma; see [[pairs]]. */
-  def simhashPairs(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int,
-                   onlyDiffGroup: Boolean = false, expandPairs: Boolean = false): DataFrame =
-    simhashGen(fps, cfg, sigma, onlyDiffGroup)
-      .map(pairs(_, cfg, expandPairs))
-      .getOrElse(Materialize.empty(fps.sparkSession, "a" -> StringType, "b" -> StringType))
+  /** The [[SimhashPass]] at Hamming <= sigma: one bucket join. */
+  def simhashPass(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int): SimhashPass = {
+    require(sigma >= 0, s"simhash sigma must be >= 0, got $sigma")
+    val g = simhashGen(fps, cfg, sigma)
+    val repPairs = verifiedPairs(Seq(g), cfg.hotBucketCap,
+      Seq(hamming(cfg).as("d"), (col("l_group") =!= col("r_group")).as("cross")))
+    val members = g.star.unionByName(g.reps.select(col("image_id").as("a"), col("image_id").as("b")))
+    SimhashPass(repPairs.select(col("a"), col("b"), col("d"), col("cross"), lit(false).as("member"))
+      .unionByName(members.select(col("a"), col("b"),
+        lit(0).as("d"), lit(false).as("cross"), lit(true).as("member"))))
+  }
 
-  /** MinHash band pairs at exact Jaccard >= tau; see [[pairs]].
+  /** SimHash bit-block pairs at Hamming <= sigma: the [[simhashPass]] at
+    * sigma, as its [[SimhashPass.edges]] (pipeline default) or, with
+    * `expandPairs = true`, its [[SimhashPass.listing]]. Empty for sigma < 0
+    * (sigma_normal = -1 matches nothing, dif_config.txt:3).
+    */
+  def simhashPairs(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int,
+                   expandPairs: Boolean = false): DataFrame =
+    if (sigma < 0) Materialize.empty(fps.sparkSession, "a" -> StringType, "b" -> StringType)
+    else if (expandPairs) simhashPass(fps, cfg, sigma).listing(sigma).select("a", "b")
+    else simhashPass(fps, cfg, sigma).edges(sigma)
+
+  /** MinHash band pairs at exact Jaccard >= tau, as star edges + rep pairs
+    * or, with `expandPairs = true`, expanded ([[expandThroughStar]]).
     *
     * @param minhashDerived kept only for source compatibility with
     *   `perfbench/src/perfbench/Layers.scala`; must be true.
@@ -341,7 +367,9 @@ object Candidates {
                 expandPairs: Boolean = false,
                 minhashDerived: Boolean = true): DataFrame = {
     require(minhashDerived, "the band pass always derives signatures from grams")
-    pairs(bandGen(fps, cfg), cfg, expandPairs)
+    val g = bandGen(fps, cfg)
+    val verified = verifiedPairs(Seq(g), cfg.hotBucketCap).select("a", "b")
+    if (expandPairs) expandThroughStar(verified, g.star, g.reps) else verified.unionByName(g.star)
   }
 
   /** Both generators through ONE candidate core, plus their star edges, with
@@ -349,9 +377,9 @@ object Candidates {
     * keeps the smaller `source` tag.
     */
   def allCandidates(fps: Dataset[FingerprintRow], cfg: GraftConfig): DataFrame = {
-    val gens = simhashGen(fps, cfg, cfg.sigmaHigh, onlyDiffGroup = false).toSeq :+
+    val gens = Option.when(cfg.sigmaHigh >= 0)(simhashGen(fps, cfg, cfg.sigmaHigh)).toSeq :+
       bandGen(fps, cfg)
-    gens.flatMap(g => g.star.map(_.withColumn("source", lit(g.source))))
+    gens.map(g => g.star.withColumn("source", lit(g.source)))
       .foldLeft(verifiedPairs(gens, cfg.hotBucketCap))(_ unionByName _)
       .groupBy("a", "b").agg(min("source").as("source"))
   }

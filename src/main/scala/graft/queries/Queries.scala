@@ -58,6 +58,9 @@ object Queries {
     * queries each — whichever query touches one first pays its cost:
     *  - `fps`: the documents' [[docCfg]] fingerprints behind the four
     *    simhash/minhash doc queries and the tiered setup (see [[docFps]]);
+    *  - `simhash`: their distance-tagged simhash pass at [[sigmaTierNormal]]
+    *    behind both tiers, `dedup_simhash_pairs` and its cross-group
+    *    listing, so the four run ONE bucket join (see [[docPass]]);
     *  - `tiered`: the two-tier clusters behind `dedup_clusters_tiered` and
     *    `dedup_tier_hist`, so the histogram is a groupBy instead of a second
     *    fingerprint + two-CC recomputation (round 2: 26.6 s + 14.0 s for
@@ -125,14 +128,19 @@ object Queries {
       .as[FingerprintRow]
   }
 
-  private def tieredFrame(s: SparkSession, dir: String): DataFrame = {
+  private def docPass(s: SparkSession, dir: String): Candidates.SimhashPass = {
     // looked up outside the build: a shared setup must not touch the
     // registry from inside another's computeIfAbsent
     val fps = docFps(s, dir)
+    Candidates.SimhashPass(sharedFrame(s, dir, "simhash")(
+      Materialize(Candidates.simhashPass(fps, docCfg, sigmaTierNormal).rows)))
+  }
+
+  private def tieredFrame(s: SparkSession, dir: String): DataFrame = {
+    val (fps, pass) = (docFps(s, dir), docPass(s, dir)) // outside the build
     sharedFrame(s, dir, "tiered") {
       Clustering.tieredClusters(fps.toDF().select("image_id"), Seq(
-        "high" -> Candidates.simhashPairs(fps, docCfg, sigmaTierHigh),
-        "normal" -> Candidates.simhashPairs(fps, docCfg, sigmaTierNormal)))
+        "high" -> pass.edges(sigmaTierHigh), "normal" -> pass.edges(sigmaTierNormal)))
     }
   }
 
@@ -250,10 +258,10 @@ object Queries {
         .orderBy("doc_id")
     }),
     "dedup_simhash_pairs" -> ((s, dir) => {
-      // expandPairs: the query-facing surface is the FULL verified pair
-      // listing (reference all-pairs semantics), not the closure-equivalent
+      // the query-facing surface is the FULL verified pair listing
+      // (reference all-pairs semantics), not the closure-equivalent
       // collapsed edge set the pipeline clusters on
-      Candidates.simhashPairs(docFps(s, dir), docCfg, docCfg.sigmaHigh, expandPairs = true)
+      docPass(s, dir).listing(docCfg.sigmaHigh)
         .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
         .orderBy("a", "b")
     }),
@@ -284,7 +292,7 @@ object Queries {
     }),
     "dedup_simhash_pairs_diffgroup" -> ((s, dir) => {
       // F6 compare mode: only cross-source pairs (reference -onlydiffF)
-      Candidates.simhashPairs(docFps(s, dir), docCfg, docCfg.sigmaHigh, onlyDiffGroup = true)
+      docPass(s, dir).listing(docCfg.sigmaHigh).filter(col("cross"))
         .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
         .orderBy("a", "b")
     }),

@@ -49,12 +49,9 @@ object ExplainAudit {
     dump("simhash_pairs", Candidates.simhashPairs(fps, cfg, cfg.sigmaHigh))
     dump("band_pairs", Candidates.bandPairs(fps, cfg))
     dump("all_candidates", Candidates.allCandidates(fps, cfg))
-    // the tiered setup's passes split into 4 and 7 blocks (simhash_pairs: 2)
-    val docFps = Fingerprints.compute(imgScan, Queries.docCfg)
-    Seq("high" -> Queries.sigmaTierHigh, "normal" -> Queries.sigmaTierNormal).foreach {
-      case (tier, sigma) =>
-        dump(s"tiered_${tier}_pairs", Candidates.simhashPairs(docFps, Queries.docCfg, sigma))
-    }
+    // the suite's one distance-tagged pass: 7 blocks (simhash_pairs: 2)
+    dump("doc_simhash_pass", Candidates.simhashPass(
+      Fingerprints.compute(imgScan, Queries.docCfg), Queries.docCfg, Queries.sigmaTierNormal).rows)
     dump("substring_pairs", Substring.substringPairs(
       fps.toDF().select("image_id", "caption_norm", "span"), cfg))
 

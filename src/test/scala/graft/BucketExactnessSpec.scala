@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 import graft.core.{GraftConfig, MinHashCore, SimHashCore}
 import graft.model.FingerprintRow
-import graft.pipeline.Candidates
+import graft.pipeline.{Candidates, Materialize}
 
 /** Randomized exactness characterization of the bucket joins (round-3
   * VERDICT #7): the pair sets must EQUAL their mathematical definition on
@@ -28,7 +28,9 @@ import graft.pipeline.Candidates
   *    64 and 128 bits, cold and salted.
   *
   * `allCandidates` runs both generators through one bucket join; it must
-  * equal the union of the standalone passes, and sample hot keys once.
+  * equal the union of the standalone passes, and sample hot keys once. One
+  * distance-tagged simhash pass at sigma 6 must answer every sigma <= 6 and
+  * the cross-group listing by filters alone.
   */
 class BucketExactnessSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -181,6 +183,45 @@ class BucketExactnessSpec extends AnyFunSuite {
           s"bits $bits trial $trial cap $cap sigma $sigma: duplicate pairs")
         assert(got.toSet === want(sigma),
           s"bits $bits trial $trial cap $cap sigma $sigma: pairs diverge")
+      }
+    }
+  }
+
+  test("one tagged pass at sigma 6: each d <= s listing and the cross-group one = brute force") {
+    import spark.implicits._
+    for (bits <- Seq(64, 128); trial <- 1 to 2) {
+      val rnd = new scala.util.Random(6000 + 10 * bits + trial)
+      val base = flipped(rnd, bits).map(_.copy(group = s"g${rnd.nextInt(2)}"))
+      // exact copies: one in its original's group (collapsed into it), one
+      // in a third group (a cross-group pair at d = 0)
+      val rs = base ++ base.take(6).flatMap(r => Seq(
+        r.copy(image_id = r.image_id + "s"), r.copy(image_id = r.image_id + "x", group = "g2")))
+      def ham(a: FingerprintRow, b: FingerprintRow) =
+        java.lang.Long.bitCount(a.simhash ^ b.simhash) +
+          java.lang.Long.bitCount(a.simhash_lo ^ b.simhash_lo)
+      def want(s: Int, crossOnly: Boolean) = expected(rs, (a, b) =>
+        ham(a, b) <= s && SimHashCore.spanCompatible(a.span, b.span) &&
+          (!crossOnly || a.group != b.group))
+      assert(Set(want(3, crossOnly = false), want(3, crossOnly = true), Set.empty).size === 3,
+        s"bits $bits trial $trial: no cross- and same-group pairs, the test is vacuous")
+      for (cap <- Seq(GraftConfig().hotBucketCap, 2)) { // cold vs salted
+        val m = Materialize(Candidates.simhashPass(
+          rs.toDS(), GraftConfig(bits = bits, hotBucketCap = cap), 6).rows)
+        try {
+          val pass = Candidates.SimhashPass(m.df)
+          for (s <- 0 to 6) {
+            val got = collectPairs(pass.listing(s))
+            assert(got.distinct.length === got.length,
+              s"bits $bits trial $trial cap $cap s $s: duplicate pairs")
+            assert(got.toSet === want(s, crossOnly = false),
+              s"bits $bits trial $trial cap $cap s $s: pairs diverge")
+          }
+          val cross = collectPairs(pass.listing(3).filter($"cross"))
+          assert(cross.distinct.length === cross.length,
+            s"bits $bits trial $trial cap $cap: duplicate cross-group pairs")
+          assert(cross.toSet === want(3, crossOnly = true),
+            s"bits $bits trial $trial cap $cap: cross-group pairs diverge")
+        } finally m.release()
       }
     }
   }

@@ -127,6 +127,23 @@ class GraftExpressionsSpec extends AnyFunSuite {
     assert(e2.getMessage.toLowerCase.contains("type"))
   }
 
+  test("SQL-surface hardening: k < 1 and wrong argument counts fail at analysis") {
+    GraftExpressions.ensureRegistered(spark)
+    // k = 0 read gram end -1 (ArrayIndexOutOfBoundsException in the task); a
+    // missing argument threw a bare IndexOutOfBoundsException; an extra one
+    // was ignored
+    Seq(
+      "graft_leading_gram_key" -> "graft_leading_gram_key('a b', 0)",
+      "graft_word_gram_keys" -> "graft_word_gram_keys('a b', -1)",
+      "graft_leading_gram_key" -> "graft_leading_gram_key('a b')",
+      "graft_sorted_intersect_count" -> "graft_sorted_intersect_count(array(1L))",
+      "graft_word_gram_keys" -> "graft_word_gram_keys('a b', 2, 3, 4)"
+    ).foreach { case (fn, call) =>
+      val e = intercept[IllegalArgumentException](spark.sql(s"SELECT $call").collect())
+      assert(e.getMessage.contains(fn), call)
+    }
+  }
+
   test("expressions survive a DataFrame round trip with codegen") {
     val cfg = GraftConfig()
     val df = Seq(

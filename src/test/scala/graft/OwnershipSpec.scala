@@ -64,8 +64,8 @@ class OwnershipSpec extends AnyFunSuite {
   test("each shared setup's blocks back the frame it caches") {
     Queries.freeSharedCaches()
     // dedup_simhash first: it caches the doc fingerprints the tiered setup reads
-    try for (q <- Seq("dedup_simhash", "dedup_clusters_tiered", "dedup_ngram_jaccard",
-                      "dedup_clusters")) {
+    try for (q <- Seq("dedup_simhash", "dedup_simhash_pairs", "dedup_clusters_tiered",
+                      "dedup_ngram_jaccard", "dedup_clusters")) {
       val before = persisted()
       val frame = Queries.queries(q)(spark, docsDir)
       assert(frame.count() > 0)

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.SampleExec
 
 import graft.queries.Queries
 
@@ -45,5 +46,18 @@ class SharedCacheSpec extends AnyFunSuite {
     // the caches must repopulate transparently after a free
     assert(Queries.queries("dedup_tier_hist")(spark, dir).count() > 0)
     Queries.freeSharedCaches()
+  }
+
+  test("the simhash pair queries reuse the tiered setup's pass: no bucket join of their own") {
+    Queries.freeSharedCaches()
+    try {
+      Queries.queries("dedup_clusters_tiered")(spark, dir).count()
+      for (q <- Seq("dedup_simhash_pairs", "dedup_simhash_pairs_diffgroup")) {
+        // the plan as planned: AQE drops a bucket join's hot-key sample from
+        // the final plan once the sampled hot set reads empty
+        val plan = Queries.queries(q)(spark, dir).queryExecution.sparkPlan
+        assert(plan.collect { case s: SampleExec => s }.isEmpty, s"$q samples hot keys:\n$plan")
+      }
+    } finally Queries.freeSharedCaches()
   }
 }
