@@ -37,9 +37,22 @@ object GraftExpressions {
     override def inputTypes =
       Seq(ArrayType(LongType), ArrayType(LongType))
 
+    // A null element has no value to match, and getLong would read it as
+    // 0: an array holding one counts NULL. Checked only where the input
+    // type admits null elements, so the pipeline's gram arrays (containsNull
+    // = false) run the plain merge walk.
+    private def elemNulls(e: Expression): Boolean = e.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => false
+    }
+    override def nullable: Boolean =
+      super.nullable || elemNulls(left) || elemNulls(right)
+
     override protected def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData]
       val y = b.asInstanceOf[ArrayData]
+      def anyNull(d: ArrayData) = (0 until d.numElements()).exists(d.isNullAt)
+      if ((elemNulls(left) && anyNull(x)) || (elemNulls(right) && anyNull(y))) return null
       var i = 0; var j = 0; var c = 0
       val nx = x.numElements(); val ny = y.numElements()
       while (i < nx && j < ny) {
@@ -57,7 +70,7 @@ object GraftExpressions {
         val c = ctx.freshName("c")
         val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
         val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-        s"""
+        val walk = s"""
            |int $i = 0; int $j = 0; int $c = 0;
            |final int $nx = $a.numElements();
            |final int $ny = $b.numElements();
@@ -69,6 +82,12 @@ object GraftExpressions {
            |}
            |${ev.value} = $c;
          """.stripMargin
+        val checks = Seq(a -> left, b -> right).collect { case (arr, e) if elemNulls(e) =>
+          val k = ctx.freshName("k")
+          s"for (int $k = 0; $k < $arr.numElements(); $k++) " +
+            s"{ if ($arr.isNullAt($k)) ${ev.isNull} = true; }\n"
+        }
+        if (checks.isEmpty) walk else checks.mkString + s"if (!${ev.isNull}) {$walk}"
       })
 
     override protected def withNewChildrenInternal(

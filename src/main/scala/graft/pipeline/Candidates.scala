@@ -31,8 +31,9 @@ import graft.model.FingerprintRow
   * generator, [[allCandidates]] both. A [[SimhashPass]] tags each verified
   * pair with its Hamming distance and group test, so one pass at sigma
   * answers every sigma' <= sigma and the cross-group listing by filters.
-  * Skew: buckets hotter than `hotBucketCap` are salted, exactly
-  * ([[bucketSelfJoin]]); AQE skew-join handles the residual imbalance.
+  * Skew: [[bucketSelfJoin]] is one salted join in which a bucket hotter
+  * than `hotBucketCap` gets `NSalts` salts and every other bucket one,
+  * exactly; AQE skew-join handles the residual imbalance.
   */
 object Candidates {
 
@@ -80,17 +81,17 @@ object Candidates {
     reps.select(col("image_id"), inline(array(blocks: _*)))
   }
 
-  /** Generic exact salted self-join on a bucket-keyed view.
+  /** Generic exact salted self-join on a bucket-keyed view: ONE join.
     *
-    * Cold buckets (<= cap rows) self-join directly on the bucket key. Hot
-    * buckets are salted: the LEFT copy of a row gets one deterministic salt
-    * `xxhash64(id) % s`; the RIGHT copy is replicated to all s salts
-    * (explode). Joining on (key, salt) then produces every unordered pair
-    * exactly once (the left row's salt matches exactly one right replica;
-    * `l_id < r_id` orders the pair) while splitting a hot bucket into s
-    * shuffle keys — no task ever materializes the whole mega-bucket.
-    * Replication cost is s× on hot rows only. Single join branch → constant
-    * plan size regardless of s.
+    * Every bucket has a salt count s: `NSalts` for a bucket hotter than
+    * `cap` rows, 1 for every other. The LEFT copy of a row gets one
+    * deterministic salt `xxhash64(id) % s`; the RIGHT copy is replicated to
+    * all s salts (explode). Joining on (key, salt) then produces every
+    * unordered pair exactly once (the left row's salt matches exactly one
+    * right replica; `l_id < r_id` orders the pair) while splitting a hot
+    * bucket into s shuffle keys — no task ever materializes the whole
+    * mega-bucket. At s = 1 this is the plain self-join, so cold and hot
+    * buckets share one plan; replication cost is s× on hot rows only.
     *
     * @param keyed   DataFrame with bucket key columns `keyCols` + payload
     *                (must include `image_id`)
@@ -101,7 +102,7 @@ object Candidates {
   def bucketSelfJoin(keyed: DataFrame, keyCols: Seq[String], cap: Int): DataFrame = {
     val key = keyCols.map(col)
     // Hot-key detection on a fixed-fraction SAMPLE: hotness only decides
-    // whether the salting rewrite applies (a performance knob — candidate
+    // a bucket's salt count (a performance knob — candidate
     // exactness is identical either way), so an estimate suffices. A truly
     // hot bucket (>> cap rows) is caught by the sample with overwhelming
     // probability; the sampled groupBy shuffles 1/8 of the exploded volume.
@@ -111,22 +112,19 @@ object Candidates {
     val hotKeys = keyed.sample(withReplacement = false, sampleFrac, seed = 7L)
       .groupBy(key: _*).agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > cap * sampleFrac)
-      .select((key :+ lit(true).as("is_hot")): _*)
-    val tagged = keyed.join(broadcast(hotKeys), keyCols, "left")
+      .select((key :+ lit(NSalts).as("n_salts")): _*)
+    val salted = keyed.join(broadcast(hotKeys), keyCols, "left")
+      .withColumn("n_salts", coalesce(col("n_salts"), lit(1)))
 
-    def prefixed(d: DataFrame, p: String) = d.select(d.columns.map(c => col(c).as(p + c)).toSeq: _*)
-    def pairs(l: DataFrame, r: DataFrame, extraKeys: Seq[String]): DataFrame = {
-      val cond = (keyCols ++ extraKeys)
-        .map(c => col("l_" + c) === col("r_" + c)).reduce(_ && _)
-      prefixed(l, "l_").join(prefixed(r, "r_"), cond && col("l_image_id") < col("r_image_id"))
-        .drop(extraKeys.flatMap(c => Seq("l_" + c, "r_" + c)): _*)
+    def side(salt: Column, p: String) = {
+      val d = salted.withColumn("salt", salt).drop("n_salts")
+      d.select(d.columns.map(c => col(c).as(p + c)).toSeq: _*)
     }
-
-    val cold = tagged.filter(col("is_hot").isNull).drop("is_hot")
-    val hot = tagged.filter(col("is_hot").isNotNull).drop("is_hot")
-    val hotL = hot.withColumn("salt", pmod(xxhash64(col("image_id")), lit(NSalts)).cast("int"))
-    val hotR = hot.withColumn("salt", explode(array((0 until NSalts).map(lit): _*)))
-    pairs(cold, cold, Nil).unionByName(pairs(hotL, hotR, Seq("salt")))
+    val cond = (keyCols :+ "salt").map(c => col("l_" + c) === col("r_" + c)).reduce(_ && _)
+    side(pmod(xxhash64(col("image_id")), col("n_salts")).cast("int"), "l_")
+      .join(side(explode(sequence(lit(0), col("n_salts") - 1)), "r_"),
+        cond && col("l_image_id") < col("r_image_id"))
+      .drop("l_salt", "r_salt")
   }
 
   /** Exact-identity collapse before a pair join: rows whose `keyCol` value

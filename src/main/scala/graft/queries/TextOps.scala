@@ -70,8 +70,9 @@ object TextOps {
     *     the join filter: the hash only decides bucketing/salting, so a
     *     collision cannot add or merge an intersection row — counts stay
     *     exact — while a hot gram (shared by m docs, m²/2 rows through one
-    *     shuffle bucket in the old shape) is capped + salted exactly like
-    *     the pipeline's LSH buckets.
+    *     shuffle bucket in the old shape) gets `NSalts` salts in the same
+    *     single join as every cold gram (one salt), exactly like the
+    *     pipeline's LSH buckets.
     *  4. |A∪B| = |A|+|B|-∩ from the collapsed sets' sizes;
     *     [[Candidates.expandThroughStar]] gives members their
     *     representative's pairs (identical set ⇒ identical j), and
@@ -87,8 +88,8 @@ object TextOps {
   def ngramJaccardPairs(docs: DataFrame, n: Int, tau: Double,
                         hotGramCap: Int = 500): Materialized = {
     // (image_id, gset) — the ONLY pass over the raw text; materializing
-    // pins it (collapse, sample, cold/hot join branches, sizes and the
-    // star expansion all re-read these blocks at scan speed).
+    // pins it (collapse, sample, both join sides, sizes and the star
+    // expansion all re-read these blocks at scan speed).
     val docSets = Materialize(scanFloor(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id").as("image_id"),
         sort_array(array_distinct(wordNgrams(toks, n))).as("gset")))

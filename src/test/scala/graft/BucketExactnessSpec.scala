@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.SampleExec
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.execution.{GenerateExec, SampleExec, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 import graft.core.{GraftConfig, MinHashCore, SimHashCore}
 import graft.model.FingerprintRow
@@ -27,10 +29,12 @@ import graft.pipeline.{Candidates, Materialize}
   *    the verify definition itself (Hamming <= sigma, span-compatible), at
   *    64 and 128 bits, cold and salted.
   *
-  * `allCandidates` runs both generators through one bucket join; it must
-  * equal the union of the standalone passes, and sample hot keys once. One
-  * distance-tagged simhash pass at sigma 6 must answer every sigma <= 6 and
-  * the cross-group listing by filters alone.
+  * `bucketSelfJoin` itself is one salted join: a planted hot bucket and
+  * cold ones give exactly the brute-force same-key pairs through one inner
+  * join, salted or not. `allCandidates` runs both generators through one
+  * bucket join; it must equal the union of the standalone passes, and
+  * sample hot keys once. One distance-tagged simhash pass at sigma 6 must
+  * answer every sigma <= 6 and the cross-group listing by filters alone.
   */
 class BucketExactnessSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -142,6 +146,31 @@ class BucketExactnessSpec extends AnyFunSuite {
     object Plans extends AdaptiveSparkPlanHelper
     val samples = Plans.collect(df.queryExecution.executedPlan) { case s: SampleExec => s }
     assert(samples.length === 1, df.queryExecution.executedPlan.toString)
+  }
+
+  test("bucketSelfJoin: one inner join, no union; a planted hot bucket is salted, exactly") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7000)
+    val rs = (0 until 200).map(i => (f"h$i%03d", 0L)) ++ // planted hot bucket
+      (1 to 50).flatMap(k => (0 until 1 + rnd.nextInt(4)).map(i => (s"c${k}_$i", k.toLong)))
+    val want = (for ((a, ka) <- rs; (b, kb) <- rs if ka == kb && a < b) yield (a, b)).toSet
+    object Plans extends AdaptiveSparkPlanHelper
+    for (cap <- Seq(20, Int.MaxValue)) {
+      val df = Candidates.bucketSelfJoin(rs.toDF("image_id", "key"), Seq("key"), cap)
+      val got = df.collect() // this frame's own plan carries the run's metrics
+        .map(r => (r.getAs[String]("l_image_id"), r.getAs[String]("r_image_id"))).toSeq
+      assert(got.distinct.length === got.length, s"cap $cap: duplicate pairs")
+      assert(got.toSet === want, s"cap $cap: pairs diverge")
+      val plan = df.queryExecution.executedPlan
+      assert(Plans.collect(plan) { case u: UnionExec => u }.isEmpty, plan.toString)
+      assert(Plans.collect(plan) { case j: BaseJoinExec if j.joinType == Inner => j }.length === 1,
+        plan.toString)
+      // the right side's salt replication: > 1 replica per row only if salted
+      val replicas = Plans.collect(plan) { case g: GenerateExec => g.metrics("numOutputRows").value }
+      assert(replicas.length === 1, plan.toString)
+      if (cap == 20) assert(replicas.head > rs.length, "cap 20: the hot bucket is not salted")
+      else assert(replicas.head === rs.length, "uncapped: a bucket was salted")
+    }
   }
 
   /** 16 random fingerprints of `bits` bits, each planted 1-4 times with 0-6

@@ -49,6 +49,21 @@ class GraftExpressionsSpec extends AnyFunSuite {
     val df = Seq((Some(Array(1L, 2L)), Option.empty[Array[Long]])).toDF("a", "b")
     val r = df.select(GraftExpressions.sortedIntersectCount(spark, col("a"), col("b"))).head()
     assert(r.isNullAt(0))
+    // a null ELEMENT is null input too (getLong reads it as 0): the SQL
+    // call is constant-folded, so it runs the interpreted path
+    assert(spark.sql("SELECT graft_sorted_intersect_count(array(CAST(NULL AS BIGINT)), array(0L))")
+      .head().isNullAt(0))
+    // ... and a shuffled frame keeps the projection in generated code
+    val elems = Seq[(Seq[Option[Long]], Seq[Option[Long]], Option[Int])](
+      (Seq(None), Seq(Some(0L)), None),
+      (Seq(Some(0L)), Seq(Some(0L), None), None),
+      (Seq(Some(1L), None), Seq(Some(1L)), None),
+      (Seq(Some(1L), Some(5L)), Seq(Some(1L)), Some(1)))
+    val got = elems.toDF("a", "b", "want").repartition(1)
+      .select(GraftExpressions.sortedIntersectCount(spark, col("a"), col("b")), col("want"))
+      .collect()
+    assert(got.length === elems.length)
+    got.foreach(r => assert(Option(r.get(0)) === Option(r.get(1)), r.toString))
   }
 
   /** Reference key scheme: hash each split-based gram STRING of width w with
