@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 import graft.core.GraftConfig
 import graft.pipeline.{Audit, DedupPipeline}
@@ -54,8 +55,7 @@ object DedupJob {
 
     val nRows = res.clusters.count()
     val nClusters = res.stats.count()
-    val nDup = DedupPipeline.dupClusters(res.clusters)
-      .select("cluster_id").distinct().count()
+    val nDup = res.stats.filter(col("n_members") > 1).count()
     println(s"[graft.DedupJob] rows=$nRows clusters=$nClusters dup_clusters=$nDup cc_iters=${res.ccIterations}")
   }
 }

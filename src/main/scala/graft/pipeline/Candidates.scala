@@ -28,9 +28,11 @@ import graft.model.FingerprintRow
   * Each generator emits key-only rows of its collapse representatives;
   * [[verifiedPairs]] joins them all in one salted [[bucketSelfJoin]] and
   * verifies by payload join-back. [[simhashPass]]/[[bandPairs]] pass one
-  * generator, [[allCandidates]] both. A [[SimhashPass]] tags each verified
-  * pair with its Hamming distance and group test, so one pass at sigma
-  * answers every sigma' <= sigma and the cross-group listing by filters.
+  * generator; [[allCandidates]] takes every edge source: simhash, band,
+  * substring ([[Substring]]), in one union and one dedup. A
+  * [[SimhashPass]] tags each verified pair with its Hamming distance and
+  * group test, so one pass at sigma answers every sigma' <= sigma and the
+  * cross-group listing by filters.
   * Skew: [[bucketSelfJoin]] is one salted join in which a bucket hotter
   * than `hotBucketCap` gets `NSalts` salts and every other bucket one,
   * exactly; AQE skew-join handles the residual imbalance.
@@ -370,14 +372,20 @@ object Candidates {
     if (expandPairs) expandThroughStar(verified, g.star, g.reps) else verified.unionByName(g.star)
   }
 
-  /** Both generators through ONE candidate core, plus their star edges, with
-    * pair-level dedup across sources (SURVEY.md §2.7): a pair found by both
-    * keeps the smaller `source` tag.
+  /** Every edge source: simhash, band, substring (if `cfg.substringPass`).
+    * Both generators run through ONE candidate core; one union and one
+    * pair-level dedup (SURVEY.md §2.7) keep the smallest `source` tag.
     */
   def allCandidates(fps: Dataset[FingerprintRow], cfg: GraftConfig): DataFrame = {
     val gens = Option.when(cfg.sigmaHigh >= 0)(simhashGen(fps, cfg, cfg.sigmaHigh)).toSeq :+
       bandGen(fps, cfg)
-    gens.map(g => g.star.withColumn("source", lit(g.source)))
+    // J5: word-aligned caption-substring pairs from the carried caption_norm
+    // (one normalization, no rescan of raw captions). Gated rows lose no
+    // pair: a pair needs minSpan < a_span < b_span, so both ends pass the gate.
+    val substring = Option.when(cfg.substringPass)(Substring.substringPairs(
+      fps.select(col("image_id"), col("caption_norm"), col("span")), cfg)
+      .withColumn("source", lit("substring")))
+    (gens.map(g => g.star.withColumn("source", lit(g.source))) ++ substring)
       .foldLeft(verifiedPairs(gens, cfg.hotBucketCap))(_ unionByName _)
       .groupBy("a", "b").agg(min("source").as("source"))
   }

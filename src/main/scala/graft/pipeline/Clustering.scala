@@ -87,7 +87,8 @@ object Clustering {
       .distinct()
 
   /** @param edges  (a, b) id pairs, in either order, duplicates and
-    *               self-loops allowed
+    *               self-loops allowed; a stored frame (committed table or
+    *               [[Materialize]]d), as the first round reads it with AQE off
     * @param vertices single-column "image_id" frame of ALL rows to label
     *                 (singletons keep their own label), same id type as
     *                 the edges
@@ -106,18 +107,10 @@ object Clustering {
     val session = spark.newSession()
     session.conf.set("spark.sql.adaptive.enabled", "false")
     session.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toString)
-    // the edges' checkpoint reaches the child session through a global temp
-    // view (same plan, no data copy); view and checkpoint are dropped once
-    // the rounds are done
+    // the caller's stored edges, oriented (hi, lo) without self-loops, reach
+    // the child session through a global temp view (same plan, no copy),
+    // dropped once the rounds are done
     val view = "graft_cc_edges_" + java.util.UUID.randomUUID.toString.replace("-", "_")
-    // The caller's edge plan runs here, in the caller's session with AQE on
-    // (the candidate generators' salted self-joins rely on its skew joins
-    // and dynamic broadcasts), and is materialized once, oriented as
-    // (hi, lo) without self-loops. Only that checkpoint crosses into the
-    // rounds.
-    val oriented = Materialize(edges
-      .select(greatest(col("a"), col("b")).as("hi"), least(col("a"), col("b")).as("lo"))
-      .where(col("hi") =!= col("lo")))
     // the newest round; it is released once the next one is materialized
     // and backs the returned labels
     var last: Materialized = null
@@ -125,7 +118,9 @@ object Clustering {
       var iter = 0
       var converged = false
       try {
-        oriented.df.createOrReplaceGlobalTempView(view)
+        edges.select(greatest(col("a"), col("b")).as("hi"), least(col("a"), col("b")).as("lo"))
+          .where(col("hi") =!= col("lo"))
+          .createOrReplaceGlobalTempView(view)
         var current = session.table("global_temp." + view)
         while (!converged && iter < maxIter) {
           val round = smallStar(largeStar(current))
@@ -136,7 +131,7 @@ object Clustering {
           converged = round.queryExecution.observedMetrics(Unsettled).getLong(0) == 0
           iter += 1
         }
-      } finally { spark.catalog.dropGlobalTempView(view); oriented.release() }
+      } finally spark.catalog.dropGlobalTempView(view)
       if (!converged)
         System.err.println(s"[graft] WARNING: connectedComponents hit maxIter=$maxIter " +
           "before converging — components may be returned SPLIT (recall, not precision, " +

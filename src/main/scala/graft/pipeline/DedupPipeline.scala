@@ -9,7 +9,8 @@ import graft.model.FingerprintRow
   *
   *   read → validate/normalize → per-row fingerprint (narrow)
   *        → candidate self-joins (simhash bit-blocks ∪ minhash bands)
-  *        → verify (Hamming / Jaccard) → union+dedup
+  *        → verify (Hamming / Jaccard) → one union+dedup with the
+  *          substring pairs ([[Candidates.allCandidates]])
   *        → connected components → cluster stats → sinks + audit.
   *
   * Every stage is DataFrame/Dataset algebra (no RDDs); the only driver-side
@@ -84,22 +85,7 @@ object DedupPipeline {
     }
     val fps = fpsDf.as[FingerprintRow]
 
-    val edges = staged("edges") {
-      val base = Candidates.allCandidates(fps, cfg)
-      if (cfg.substringPass) {
-        // J5: exact word-aligned caption-substring pairs (anchor-gram join),
-        // fed from the fingerprint stage's carried caption_norm — ONE
-        // normalization pass and no second scan of the raw captions (the
-        // stage checkpoint is the substring pass's input). Feeding gated
-        // rows is lossless: an emitted pair needs a_span > minSpan (anchor
-        // gate) and a_span < b_span, so both endpoints pass the stage gate.
-        val rows = fpsDf.select(col("image_id"), col("caption_norm"), col("span"))
-        base
-          .unionByName(Substring.substringPairs(rows, cfg)
-            .withColumn("source", lit("substring")))
-          .groupBy("a", "b").agg(min("source").as("source"))
-      } else base
-    }
+    val edges = staged("edges")(Candidates.allCandidates(fps, cfg))
 
     var cc: Option[Clustering.CCResult] = None
     val clusters = try staged("clusters") {

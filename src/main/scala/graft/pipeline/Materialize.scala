@@ -39,10 +39,10 @@ final class Materialized private[pipeline] (val df: DataFrame) {
 /** The one way a frame is materialized in `pipeline/` and `queries/`.
   *
   * Materializing replaces the frame's logical plan with a scan of the
-  * stored result. Stages that are re-read several times (collapse star,
-  * cold/hot join branches, two LSH paths, each CC round) would otherwise
-  * nest the whole upstream DAG into every branch, and Catalyst analysis
-  * time explodes. With `sparkContext.setCheckpointDir` configured the
+  * stored result. Frames that are re-read several times (an unaudited
+  * pipeline stage, the query suite's shared fingerprint frame and simhash
+  * pass, each CC round) would otherwise nest the whole upstream DAG into
+  * every reader, and Catalyst analysis time explodes. With `sparkContext.setCheckpointDir` configured the
   * result goes to the RELIABLE checkpoint store and survives executor
   * loss; bare local mode falls back to `localCheckpoint` (executor-resident
   * blocks — fine in a single JVM, not the cluster default).

@@ -34,8 +34,8 @@ object TextOps {
     * (all consumers are aggregations/equi-joins/per-row maps with a final
     * orderBy).
     */
-  private[queries] def scanFloor(df: DataFrame, cap: Int = Int.MaxValue): DataFrame = {
-    val target = math.min(df.sparkSession.sparkContext.defaultParallelism, cap)
+  private[queries] def scanFloor(df: DataFrame): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 < target) df.repartition(target) else df
   }
 

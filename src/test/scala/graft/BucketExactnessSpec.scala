@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 import graft.core.{GraftConfig, MinHashCore, SimHashCore}
 import graft.model.FingerprintRow
-import graft.pipeline.{Candidates, Materialize}
+import graft.pipeline.{Candidates, Materialize, Substring}
 
 /** Randomized exactness characterization of the bucket joins (round-3
   * VERDICT #7): the pair sets must EQUAL their mathematical definition on
@@ -32,8 +32,8 @@ import graft.pipeline.{Candidates, Materialize}
   * `bucketSelfJoin` itself is one salted join: a planted hot bucket and
   * cold ones give exactly the brute-force same-key pairs through one inner
   * join, salted or not. `allCandidates` runs both generators through one
-  * bucket join; it must equal the union of the standalone passes, and
-  * sample hot keys once. One distance-tagged simhash pass at sigma 6 must
+  * bucket join; it must equal the union of the standalone passes
+  * (substring included), and sample hot keys once. One distance-tagged simhash pass at sigma 6 must
   * answer every sigma <= 6 and the cross-group listing by filters alone.
   */
 class BucketExactnessSpec extends AnyFunSuite {
@@ -125,9 +125,14 @@ class BucketExactnessSpec extends AnyFunSuite {
         val c = fusedCfg(cap)
         val sim = collectPairs(Candidates.simhashPairs(ds, c, c.sigmaHigh)).toSet
         val band = collectPairs(Candidates.bandPairs(ds, c)).toSet
+        // empty on these rows (one empty caption, one span); SubstringSpec
+        // checks the pipeline's substring-tagged edges
+        val sub = collectPairs(Substring.substringPairs(
+          ds.toDF().select("image_id", "caption_norm", "span"), c)).toSet
         assert(sim.nonEmpty && band.nonEmpty && (sim & band).nonEmpty,
           s"trial $trial cap=$cap: the sources do not overlap, the test is vacuous")
-        val want = (sim.map(_ -> "simhash") ++ band.map(_ -> "minhash_band"))
+        val want = (sim.map(_ -> "simhash") ++ band.map(_ -> "minhash_band") ++
+          sub.map(_ -> "substring"))
           .groupBy(_._1).map { case (p, tagged) => p -> tagged.map(_._2).min }
         val got = Candidates.allCandidates(ds, c).select("a", "b", "source").collect()
           .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toSeq

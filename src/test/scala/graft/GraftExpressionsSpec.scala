@@ -2,6 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.core.{GraftConfig, Murmur3x64, Shingling}
@@ -23,6 +27,37 @@ class GraftExpressionsSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  /** Collects `df` with codegen fallback off, so a generated-code compile
+    * failure fails the query, and asserts that its executed plan evaluates
+    * each of `exprs` inside a whole-stage-codegen stage. A frame built by
+    * `Seq.toDF` alone is folded into a `LocalTableScan` by
+    * `ConvertToLocalRelation` and runs the interpreted path; a shuffle
+    * before the projection keeps it in generated code.
+    */
+  private def collectCodegen(df: DataFrame, exprs: Class[_ <: Expression]*): Array[Row] = {
+    val saved = Seq("spark.sql.codegen.fallback", "spark.sql.codegen.factoryMode")
+      .map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    val rows = try df.collect() finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // the operators one generated stage compiles: its subtree down to, not
+    // past, its InputAdapter boundaries
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(inStage)
+    }
+    object Plans extends AdaptiveSparkPlanHelper
+    val plan = df.queryExecution.executedPlan
+    val stages = Plans.collect(plan) { case w: WholeStageCodegenExec => inStage(w.child) }
+    for (e <- exprs)
+      assert(stages.exists(_.exists(_.expressions.exists(_.find(e.isInstance).isDefined))),
+        s"no whole-stage-codegen stage evaluates ${e.getSimpleName}:\n$plan")
+    rows
+  }
+
   private val sortedDistinct: Gen[Array[Long]] =
     Gen.listOf(Gen.chooseNum(Long.MinValue, Long.MaxValue))
       .map(_.distinct.sorted.toArray)
@@ -38,10 +73,12 @@ class GraftExpressionsSpec extends AnyFunSuite {
     rows += ((base, base.take(3)))
     rows += ((base.drop(2), base))
     rows += ((Array.emptyLongArray, base))
-    val df = rows.toSeq.toDF("a", "b")
-    val out = df.select(
+    val df = rows.toSeq.toDF("a", "b").repartition(2)
+    val out = collectCodegen(df.select(
       GraftExpressions.sortedIntersectCount(spark, col("a"), col("b")).as("fast"),
-      size(array_intersect(col("a"), col("b"))).as("ref")).collect()
+      size(array_intersect(col("a"), col("b"))).as("ref")),
+      classOf[GraftExpressions.SortedIntersectCount])
+    assert(out.length === rows.length)
     out.foreach(r => assert(r.getInt(0) === r.getInt(1)))
   }
 
@@ -164,11 +201,12 @@ class GraftExpressionsSpec extends AnyFunSuite {
     val df = Seq(
       ("a", "alpha beta gamma delta"),
       ("b", "alpha beta"),
-      ("c", "")).toDF("id", "caption_norm")
-    val out = df.select(col("id"),
+      ("c", "")).toDF("id", "caption_norm").repartition(2)
+    val out = collectCodegen(df.select(col("id"),
       GraftExpressions.leadingGramKey(spark, col("caption_norm"), cfg.shingleK).as("lead"),
-      GraftExpressions.wordGramKeys(spark, col("caption_norm"), cfg.shingleK).as("keys"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getSeq[Long](2))).toMap
+      GraftExpressions.wordGramKeys(spark, col("caption_norm"), cfg.shingleK).as("keys")),
+      classOf[GraftExpressions.LeadingGramKey], classOf[GraftExpressions.WordGramKeyArray])
+      .map(r => r.getString(0) -> (r.getLong(1), r.getSeq[Long](2))).toMap
     assert(out("a")._2.contains(out("a")._1))
     assert(out("b")._2.contains(out("b")._1))
     assert(out("c")._2.isEmpty)

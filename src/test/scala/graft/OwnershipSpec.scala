@@ -85,7 +85,10 @@ class OwnershipSpec extends AnyFunSuite {
     } finally sc.setJobDescription(null)
   }
 
-  test("every job of an audited run with debug dumps carries its stage label") {
+  /** The `spark.job.description` of every job one audited run with debug
+    * dumps starts, in a fresh audit directory.
+    */
+  private def runLabels(auditDir: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
     val input = images
@@ -101,7 +104,7 @@ class OwnershipSpec extends AnyFunSuite {
     // by the pipeline carries it
     sc.setJobGroup(group, "caller label")
     try {
-      val audit = new Audit(spark, s"$tmp/audit-labels", runId = "labels")
+      val audit = new Audit(spark, auditDir, runId = "labels")
       DedupPipeline.run(input, GraftConfig(debugDump = true), Some(audit))
       // one listener sees events in order: once the sentinel job is seen,
       // so is every job started before it
@@ -110,12 +113,27 @@ class OwnershipSpec extends AnyFunSuite {
       val deadline = System.nanoTime() + 30000000000L
       while (!seen.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
     } finally { sc.clearJobGroup(); sc.setJobDescription(null); sc.removeSparkListener(listener) }
-    val labels = seen.asScala.toSeq.filter(_ != "sentinel")
+    seen.asScala.toSeq.filter(_ != "sentinel")
+  }
+
+  test("every job of an audited run with debug dumps carries its stage label") {
+    val labels = runLabels(s"$tmp/audit-labels")
     assert(labels.nonEmpty)
     assert(labels.forall(_.startsWith("graft: stage ")),
       s"jobs without a stage label: ${labels.filterNot(_.startsWith("graft: stage ")).distinct}")
     for (stage <- Seq("clusters", "cluster_stats", "debug_fingerprints", "debug_cluster_info"))
       assert(labels.contains(s"graft: stage $stage"), s"no job labelled $stage")
+
+    // Job budget: a second, warm run starts at most this many jobs per
+    // stage. A change that adds jobs to a stage must raise its bound here
+    // and say why.
+    val budget = Map("fingerprints" -> 2, "edges" -> 18, "clusters" -> 6,
+      "cluster_stats" -> 4, "debug_fingerprints" -> 2, "debug_cluster_info" -> 5)
+    val warm = runLabels(s"$tmp/audit-labels-warm")
+      .groupBy(_.stripPrefix("graft: stage ")).map { case (stage, js) => stage -> js.size }
+    assert(warm.keySet === budget.keySet, s"stages of the warm run: $warm")
+    for ((stage, bound) <- budget)
+      assert(warm(stage) <= bound, s"stage $stage ran ${warm(stage)} jobs, budget $bound: $warm")
   }
 
   test("two CC tiers cancelled mid-run leave no blocks and no global temp view") {
@@ -128,12 +146,12 @@ class OwnershipSpec extends AnyFunSuite {
     def globalViews() = spark.catalog.listTables("global_temp").collect().map(_.name).toSet
 
     // The tier threads inherit the job group; from its Nth job on, every job
-    // of the group is cancelled, whichever tier runs it. Each tier first
-    // checkpoints its oriented edges (jobs 1-2), then runs 10 rounds, one
-    // job each (jobs 3-22, interleaved), then the stacked labels are
-    // materialized in 6 jobs: N = 2 fails an edge checkpoint, 3 a first
-    // round, 12 a middle one, 22 the last one, 23 and 25 the label join.
-    for (n <- Seq(2, 3, 12, 22, 23, 25)) {
+    // of the group is cancelled, whichever tier runs it. Each tier runs 10
+    // rounds, one job each, straight off its edges (jobs 1-20,
+    // interleaved), then the stacked labels are materialized in 6 jobs:
+    // N = 1 and 2 fail a first round, 10 a middle one, 20 the last one, 21
+    // and 23 the label join.
+    for (n <- Seq(1, 2, 10, 20, 21, 23)) {
       val group = s"cc-fault-$n-${System.nanoTime()}"
       val started = new AtomicInteger()
       val listener = new SparkListener {
