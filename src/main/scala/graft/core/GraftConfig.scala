@@ -92,6 +92,5 @@ object GraftConfig {
     * (/root/reference/token_boundary_config.txt, dif_config.txt).
     */
   val referenceGate: Int = 200
-  val referenceSigmaHigh: Int = 1
   val referenceSigmaNormal: Int = -1
 }

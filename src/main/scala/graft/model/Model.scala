@@ -1,17 +1,8 @@
 package graft.model
 
-/** Typed row shapes (SURVEY.md §7.2 step 1). `ImageRow` is exactly
-  * BASELINE.json `input_hint`'s schema.
-  */
-final case class ImageRow(
-    image_id: String,
-    bytes: Array[Byte],
-    w: Int,
-    h: Int,
-    fmt: String,
-    caption: String,
-    phash: Long
-)
+// Typed row shapes of the pipeline's own stages (SURVEY.md §7.2 step 1).
+// The input image table stays a DataFrame: the pipeline reads only
+// (image_id, caption, phash) from it (see DedupPipeline).
 
 /** Per-row fingerprint record — the analogue of the reference FingerPrint
   * (/root/reference/EigenWord.h:97-129): simhash (64-bit fingerprint, or

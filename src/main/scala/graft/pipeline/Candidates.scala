@@ -347,14 +347,12 @@ object Candidates {
   }
 
   /** SimHash bit-block pairs at Hamming <= sigma: the [[simhashPass]] at
-    * sigma, as its [[SimhashPass.edges]] (pipeline default) or, with
-    * `expandPairs = true`, its [[SimhashPass.listing]]. Empty for sigma < 0
+    * sigma, as its [[SimhashPass.edges]] (star edges + rep pairs; the full
+    * pair listing is [[SimhashPass.listing]]). Empty for sigma < 0
     * (sigma_normal = -1 matches nothing, dif_config.txt:3).
     */
-  def simhashPairs(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int,
-                   expandPairs: Boolean = false): DataFrame =
+  def simhashPairs(fps: Dataset[FingerprintRow], cfg: GraftConfig, sigma: Int): DataFrame =
     if (sigma < 0) Materialize.empty(fps.sparkSession, "a" -> StringType, "b" -> StringType)
-    else if (expandPairs) simhashPass(fps, cfg, sigma).listing(sigma).select("a", "b")
     else simhashPass(fps, cfg, sigma).edges(sigma)
 
   /** MinHash band pairs at exact Jaccard >= tau, as star edges + rep pairs

@@ -162,13 +162,6 @@ object Clustering {
         min("span").as("min_span"), max("span").as("max_span"),
         avg("span").as("avg_span"), sum("span").as("total_span"))
 
-  /** Cluster-size histogram (A3): size → number of clusters, analogue of
-    * nblockAmountMap/hblockAmountMap (/root/reference/CloneSet.cpp:172-231).
-    */
-  def sizeHistogram(clusters: DataFrame): DataFrame =
-    clusters.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-      .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-
   /** Two-tier clustering surface (reference high-sim vs normal-sim clone-set
     * lists, /root/reference/CloneSet.cpp:86-165, CloneSet.h:59-92): one
     * component run per (tier, edge set), stacked with a `tier` column and

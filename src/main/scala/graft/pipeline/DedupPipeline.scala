@@ -34,15 +34,6 @@ object DedupPipeline {
     valid.filter(col("image_id").isNotNull && col("caption").isNotNull)
   }
 
-  /** Row-level resume filter (SURVEY.md §2.2 F2): drop rows whose ids are
-    * already in the committed output — the analogue of the reference's
-    * file-mask skip (/root/reference/Main.cpp:199-204). Left-anti join; at
-    * scale Catalyst plans it as a broadcast or shuffled anti join depending
-    * on the committed side's size.
-    */
-  def resumeFilter(images: DataFrame, doneIds: DataFrame): DataFrame =
-    images.join(doneIds.select(col("image_id")).distinct(), Seq("image_id"), "left_anti")
-
   final case class Result(
       fingerprints: Dataset[FingerprintRow],
       edges: DataFrame,     // (a, b, source)

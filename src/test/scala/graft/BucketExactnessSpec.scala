@@ -33,7 +33,8 @@ import graft.pipeline.{Candidates, Materialize, Substring}
   * cold ones give exactly the brute-force same-key pairs through one inner
   * join, salted or not. `allCandidates` runs both generators through one
   * bucket join; it must equal the union of the standalone passes
-  * (substring included), and sample hot keys once. One distance-tagged simhash pass at sigma 6 must
+  * (substring included, on planted caption substrings), and sample hot
+  * keys once. One distance-tagged simhash pass at sigma 6 must
   * answer every sigma <= 6 and the cross-group listing by filters alone.
   */
 class BucketExactnessSpec extends AnyFunSuite {
@@ -116,20 +117,32 @@ class BucketExactnessSpec extends AnyFunSuite {
     */
   private def fusedCfg(cap: Int) = cfg(cap).copy(sigmaHigh = 15)
 
+  /** Two chains of word-aligned caption substrings (prefix, infix, suffix)
+    * on the first six rows, the span growing with the caption, so each
+    * chain yields three substring pairs; the second chain runs against the
+    * id order. Spans stay within 100-130, span-compatible with the rest.
+    */
+  private val plantedCaptions = Seq("red car parked", "old red car parked",
+    "old red car parked outside", "two dogs chasing a ball here",
+    "two dogs chasing a ball", "dogs chasing a ball")
+
+  private def withCaptions(rs: Seq[FingerprintRow]): Seq[FingerprintRow] =
+    rs.zipWithIndex.map { case (r, i) =>
+      plantedCaptions.lift(i).fold(r)(c => r.copy(caption_norm = c, span = 100 + c.length))
+    }
+
   test("allCandidates = standalone simhash ∪ band pairs, deduped by min(source)") {
     (1 to nTrials).foreach { trial =>
-      val rs = rows(new scala.util.Random(3000 + trial))
+      val rs = withCaptions(rows(new scala.util.Random(3000 + trial)))
       import spark.implicits._
       val ds = rs.toDS()
       Seq(1000000, 2).foreach { cap =>
         val c = fusedCfg(cap)
         val sim = collectPairs(Candidates.simhashPairs(ds, c, c.sigmaHigh)).toSet
         val band = collectPairs(Candidates.bandPairs(ds, c)).toSet
-        // empty on these rows (one empty caption, one span); SubstringSpec
-        // checks the pipeline's substring-tagged edges
         val sub = collectPairs(Substring.substringPairs(
           ds.toDF().select("image_id", "caption_norm", "span"), c)).toSet
-        assert(sim.nonEmpty && band.nonEmpty && (sim & band).nonEmpty,
+        assert(sim.nonEmpty && band.nonEmpty && (sim & band).nonEmpty && sub.nonEmpty,
           s"trial $trial cap=$cap: the sources do not overlap, the test is vacuous")
         val want = (sim.map(_ -> "simhash") ++ band.map(_ -> "minhash_band") ++
           sub.map(_ -> "substring"))
@@ -211,8 +224,8 @@ class BucketExactnessSpec extends AnyFunSuite {
         s"bits $bits trial $trial: the pairs do not grow with sigma")
       val ds = rs.toDS()
       for (cap <- Seq(GraftConfig().hotBucketCap, 2); sigma <- sigmas) { // cold vs salted
-        val got = collectPairs(Candidates.simhashPairs(
-          ds, GraftConfig(bits = bits, hotBucketCap = cap), sigma, expandPairs = true))
+        val got = collectPairs(Candidates.simhashPass(
+          ds, GraftConfig(bits = bits, hotBucketCap = cap), sigma).listing(sigma))
         assert(got.distinct.length === got.length,
           s"bits $bits trial $trial cap $cap sigma $sigma: duplicate pairs")
         assert(got.toSet === want(sigma),

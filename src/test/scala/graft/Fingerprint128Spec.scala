@@ -50,8 +50,8 @@ class Fingerprint128Spec extends AnyFunSuite {
       val (a, b) = (fps(i).image_id, fps(j).image_id)
       if (a < b) (a, b) else (b, a)
     }).toSet
-    val got = Candidates.simhashPairs(result.fingerprints, cfg, cfg.sigmaHigh,
-        expandPairs = true)
+    val got = Candidates.simhashPass(result.fingerprints, cfg, cfg.sigmaHigh)
+      .listing(cfg.sigmaHigh).select("a", "b")
       .collect().map(r => (r.getString(0), r.getString(1)))
       .map { case (a, b) => if (a < b) (a, b) else (b, a) }.toSet
     assert(got === brute)

@@ -4,7 +4,9 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.GraftConfig
-import graft.streaming.{StreamingDedup, StreamingIngest}
+import graft.fixtures.SyntheticImages
+import graft.pipeline.Fingerprints
+import graft.streaming.StreamingDedup
 
 /** Streaming stateful exact-dedup (flatMapGroupsWithState): arriving rows
   * are deduped against ALL previously-seen fingerprints, and the per-key
@@ -30,7 +32,8 @@ class StreamingDedupSpec extends AnyFunSuite {
     val capC = "an old stone bridge crossing a quiet forest stream"
 
     def runPass(): Unit = {
-      val rows = StreamingIngest.contentStream(spark, src)
+      val rows = StreamingDedup.contentRows(
+        spark.readStream.schema(spark.read.parquet(src).schema).parquet(src))
       val q = StreamingDedup.dedupAgainstState(rows).writeStream
         .format("parquet").option("path", out)
         .option("checkpointLocation", StreamingDedup.guardCheckpoint(spark, ckpt))
@@ -140,5 +143,31 @@ class StreamingDedupSpec extends AnyFunSuite {
     val d = StreamingDedup.contentRows(imageRows(Seq("i4" -> "same caption text here today"))).head()
     assert((c.content_hi, c.content_lo) !== ((d.content_hi, d.content_lo)),
       "exact dedup is byte-equality of the raw caption (oracle PARTITION BY text)")
+  }
+}
+
+/** The fingerprint stage is a narrow, stateless projection, so it runs
+  * unchanged on a `readStream` of the image table's directory.
+  */
+class StreamingSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  test("streaming fingerprint ingest matches the batch stage exactly") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val (img, _) = SyntheticImages.materialize(spark, tmp, nFamilies = 40)
+    val cfg = GraftConfig()
+
+    val stream = Fingerprints.compute(
+      spark.readStream.schema(img.schema).parquet(s"$tmp/images"), cfg).toDF()
+    val q = stream.writeStream.format("memory").queryName("fps_stream")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(120000)
+
+    val streamed = spark.table("fps_stream")
+      .select("image_id", "simhash", "span").orderBy("image_id").collect()
+    val batch = Fingerprints.compute(img, cfg).toDF()
+      .select("image_id", "simhash", "span").orderBy("image_id").collect()
+    assert(streamed.toSeq === batch.toSeq)
+    spark.sql("DROP TABLE IF EXISTS fps_stream")
   }
 }
